@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import hashlib
 from dataclasses import dataclass, field
+from statistics import NormalDist
 
 import numpy as np
 import pyarrow as pa
@@ -78,6 +79,15 @@ class Corpus:
         return [" ".join(vocab[t]) for t in self.tokens]
 
 
+def lognormal_lengths(n: int) -> np.ndarray:
+    """``n`` document lengths at evenly spaced quantiles of the log-normal,
+    so that every seed has the same lengths (and the same total work) and
+    only their order and their terms vary."""
+    z = np.array([NormalDist().inv_cdf((i + 0.5) / n) for i in range(n)])
+    return np.clip(np.rint(MEDIAN_LEN * np.exp(LEN_SIGMA * z)),
+                   MIN_LEN, MAX_LEN).astype(int)
+
+
 def make_documents(seed: int, n_docs: int, dup_share: float = 0.05,
                    id_base: int = 0, cdf: np.ndarray | None = None) -> Corpus:
     """``n_docs`` documents, of which ``round(n_docs * dup_share)`` are
@@ -87,8 +97,8 @@ def make_documents(seed: int, n_docs: int, dup_share: float = 0.05,
     cdf = zipf_cdf() if cdf is None else cdf
     n_dup = int(round(n_docs * dup_share))
     n_orig = n_docs - n_dup
-    lens = np.clip(np.rint(rng.lognormal(np.log(MEDIAN_LEN), LEN_SIGMA,
-                                         n_orig)), MIN_LEN, MAX_LEN).astype(int)
+    lens = lognormal_lengths(n_orig)
+    rng.shuffle(lens)
     flat = draw_terms(rng, cdf, int(lens.sum()))
     tokens = np.split(flat, np.cumsum(lens)[:-1])
     sources = rng.choice(n_orig, size=n_dup, replace=False)
@@ -180,13 +190,15 @@ def file_sha256(path: str) -> str:
 
 def make_queries(seed: int, corpus: Corpus, n: int, vocab: np.ndarray,
                  max_terms: int = 4) -> list[str]:
-    """Free-text queries of 1..``max_terms`` distinct terms, each term drawn
-    by its corpus frequency, so head and tail postings lists are both hit."""
+    """Free-text queries of distinct terms, each term drawn by its corpus
+    frequency, so head and tail postings lists are both hit.  Query ``i``
+    has ``i % max_terms + 1`` terms, so any run of consecutive queries has
+    the same mix of lengths whatever the seed."""
     rng = np.random.default_rng([seed, 3])
     flat = np.concatenate(corpus.tokens)
     out = []
-    for _ in range(n):
-        k = int(rng.integers(1, max_terms + 1))
+    for i in range(n):
+        k = i % max_terms + 1
         terms: list[int] = []
         while len(terms) < k:
             t = int(flat[rng.integers(0, len(flat))])

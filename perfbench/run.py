@@ -32,10 +32,24 @@ sys.path.insert(1, ROOT)
 import gen  # noqa: E402
 import oracle  # noqa: E402
 from tracing import (RssSampler, Tracer, layer_unit,  # noqa: E402
-                     per_layer_metric_names)
+                     per_layer_metric_names, tree_cpu_s)
 
-E2E_UNITS = {"request_p50_ms": "ms", "items_per_s": "1/s", "setup_s": "s"}
+E2E_UNITS = {"request_cpu_ms": "ms", "items_per_cpu_s": "1/s", "setup_s": "s"}
 SHUFFLE_PARTITIONS = 8
+
+# CPU seconds the reference loop takes on a quiet 4-vCPU x86 VM; CPU times
+# are reported as if the host had run at that speed (``ReferenceLoop``).
+REFERENCE_LOOP_S = 0.08
+
+# Loop steps run before measuring, so that the measured steps find the JIT
+# compiler mostly done, and the least number measured (``closed_loop``);
+# the measured steps take longer than ``--seconds`` on 4 vCPUs, so every run
+# measures the same work.
+WARM_STEPS = {"search": 2, "dedup": 1}
+MIN_STEPS = {"search": 3, "dedup": 2}
+JIT_SETTLE_POLL_S = 0.5
+JIT_IDLE_SHARE = 0.1
+JIT_SETTLE_MAX_S = 10
 
 # search: one persisted index over a Zipf corpus, read by single queries
 # and by batches of queries.
@@ -45,7 +59,6 @@ WARM_BUILD_DOCS = 200
 QUERY_LOG = 160
 BATCH = 16
 QUERIES_PER_BATCH = 2       # single queries sent between two batches
-WARM_QUERIES = 2
 TRACE_ROUNDS = 3            # traced run: rounds of the query mix, 1 client
 APPENDS = 2                 # traced run only
 APPEND_DOCS = 300
@@ -59,12 +72,34 @@ MIN_RECALL = 0.95
 PREPARES = 3
 TRACE_PASSES = 2
 
-# A timed operation during which the hypervisor took more than this share
-# of the VM's CPU time (CPU steal) is kept in the record but left out of the
-# metrics: on a shared host such bursts slow a whole operation by up to 2x.
-STEAL_SHARE_MAX = 0.02
-MIN_CLEAN = 2               # undisturbed samples of each kind per run
-EXTEND_S = 20               # longest extension of the window to get them
+
+class ReferenceLoop:
+    """A fixed piece of CPU work that tells how fast the host runs now.
+
+    On a shared host the clock rate, and with it the CPU time of the same
+    work, drifts by 15-20% from one quarter of an hour to the next.  The
+    loop — a Python integer loop and a random gather over a 64 MB array —
+    runs before each set-up step and each timed operation, and the run's
+    median loop time, against ``REFERENCE_LOOP_S``, scales its CPU times to
+    a fixed reference speed."""
+
+    def __init__(self):
+        import numpy as np
+        rng = np.random.default_rng(0)
+        self._table = rng.integers(0, 1 << 23, 1 << 23)
+        self.times: list[float] = []
+
+    def run(self) -> None:
+        t = time.thread_time()
+        x = 0
+        for i in range(300_000):
+            x += i * i % 7
+        self._table[self._table[:1 << 21]].sum()
+        self.times.append(time.thread_time() - t)
+
+    def scale(self) -> float:
+        """Reference speed over the run's median speed."""
+        return REFERENCE_LOOP_S / statistics.median(self.times)
 
 
 class Run:
@@ -79,9 +114,10 @@ class Run:
         self.spark = None
         self.attempted = 0
         self.failed = 0
-        # kind -> [(seconds, steal share, items)] per timed operation
+        # kind -> [(wall s, CPU s, items)] per timed operation
         self.samples: dict[str, list[tuple[float, float, int]]] = {}
         self.extra: dict[str, float] = {}
+        self.reference = ReferenceLoop()
         self.detail: dict = {"phases_s": {}}
         self._mark = time.perf_counter()
 
@@ -94,17 +130,23 @@ class Run:
     def path(self, *parts: str) -> str:
         return os.path.join(self.work, *parts)
 
+    def cpu(self) -> float:
+        """CPU seconds the process tree has used so far, JIT compilation
+        left out: it is a one-off warm-up cost that a long-running service
+        amortises, and how far it has got varies from run to run."""
+        total, jit = tree_cpu_s(os.getpid())
+        return total - jit
+
     def timed(self, kind: str, fn, check, items: int = 1):
         """Run one operation of ``items`` items, time it into
         ``samples[kind]`` and check its output; an exception or a failed
-        check counts as a failure."""
+        check counts as a failure.  The reference loop runs just before."""
+        self.reference.run()
         try:
             with self.tracer.op(kind):
-                s = steal_s()
-                t = time.perf_counter()
+                c, t = self.cpu(), time.perf_counter()
                 out = fn()
-                dt = time.perf_counter() - t
-                stolen = (steal_s() - s) / (dt * cpu_count())
+                dt, dc = time.perf_counter() - t, self.cpu() - c
             ok = check(out)
         except Exception:  # a failed operation must not end the run
             traceback.print_exc(file=sys.stderr)
@@ -114,27 +156,20 @@ class Run:
         self.attempted += 1
         self.failed += not ok
         if dt is not None:
-            self.samples.setdefault(kind, []).append((dt, stolen, items))
+            self.samples.setdefault(kind, []).append((dt, dc, items))
         return ok
 
-    def clean(self, kind: str) -> list[tuple[float, float, int]]:
-        """The samples of ``kind`` not disturbed by CPU steal, or all of
-        them when fewer than ``MIN_CLEAN`` are."""
-        all_ = self.samples.get(kind, [])
-        ok = [x for x in all_ if x[1] <= STEAL_SHARE_MAX]
-        return ok if len(ok) >= MIN_CLEAN else all_
+    def op_cpu_s(self, kind: str) -> float:
+        """Median CPU seconds of one operation of ``kind``, at reference
+        speed."""
+        return self.reference.scale() * statistics.median(
+            x[1] for x in self.samples[kind])
 
-    def enough(self, *kinds: str) -> bool:
-        return all(sum(x[1] <= STEAL_SHARE_MAX for x in self.samples.get(k, []))
-                   >= MIN_CLEAN for k in kinds)
-
-    def p50_ms(self, kind: str) -> float:
-        return 1000 * statistics.median(x[0] for x in self.clean(kind))
-
-    def items_per_s(self, *kinds: str) -> float:
-        """Items served per second of operation time."""
-        xs = [x for k in kinds for x in self.clean(k)]
-        return sum(x[2] for x in xs) / sum(x[0] for x in xs)
+    def items_per_cpu_s(self, *kinds: str) -> float:
+        """Items served per CPU second, over the run's mix of ``kinds``."""
+        ops = {k: self.samples[k] for k in kinds}
+        return (sum(x[2] for xs in ops.values() for x in xs)
+                / sum(len(xs) * self.op_cpu_s(k) for k, xs in ops.items()))
 
     def reset_samples(self) -> None:
         """Forget the warm-up's timings; its checks still count."""
@@ -158,18 +193,21 @@ def start_session(run: Run):
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         "--conf spark.ui.showConsoleProgress=false "
         f"--conf spark.sql.warehouse.dir={run.path('warehouse')} "
-        f"--driver-java-options -Djava.io.tmpdir={tmp} pyspark-shell")
+        "--driver-java-options "
+        f"'-Djava.io.tmpdir={tmp} -XX:-UseDynamicNumberOfCompilerThreads' "
+        "pyspark-shell")
     from big_data_assignment_2_spark.session import get_spark
 
-    t = time.perf_counter()
+    c, t = run.cpu(), time.perf_counter()
     with run.tracer.layer("session"):
         spark = get_spark("perfbench")
         spark.range(1).count()
-    start_s = time.perf_counter() - t
+    start_s, start_cpu_s = time.perf_counter() - t, run.cpu() - c
     spark.sparkContext.setLogLevel("ERROR")
     run.spark = run.tracer.spark = spark
     run.add("session.start_s", start_s)
-    return spark, start_s
+    run.detail["session_cpu_s"] = start_cpu_s
+    return spark, start_cpu_s
 
 
 def stop_session(run: Run, sampler: RssSampler) -> None:
@@ -228,16 +266,31 @@ def noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def closed_loop(step, seconds: float, enough) -> None:
-    """One client: run ``step`` until ``seconds`` have passed and
-    ``enough()`` holds, or until ``EXTEND_S`` more seconds have passed (the
-    last step is finished)."""
-    t = time.perf_counter()
-    while True:
-        step()
-        elapsed = time.perf_counter() - t
-        if (elapsed >= seconds and enough()) or elapsed >= seconds + EXTEND_S:
+def settle_jit() -> None:
+    """Wait, idle, until the JIT compiler has worked off the methods the
+    warm-up made hot (its threads used under ``JIT_IDLE_SHARE`` of a core
+    over the last interval), or ``JIT_SETTLE_MAX_S`` have passed.  How far
+    compilation lags behind the work depends on how much CPU time the host
+    gave the compiler threads, so without this the first measured
+    operations run more or less interpreted code from run to run."""
+    deadline = time.perf_counter() + JIT_SETTLE_MAX_S
+    jit = tree_cpu_s(os.getpid())[1]
+    while time.perf_counter() < deadline:
+        time.sleep(JIT_SETTLE_POLL_S)
+        now = tree_cpu_s(os.getpid())[1]
+        if now - jit < JIT_IDLE_SHARE * JIT_SETTLE_POLL_S:
             return
+        jit = now
+
+
+def closed_loop(step, seconds: float, min_steps: int) -> None:
+    """One client: run ``step`` until ``seconds`` have passed (the last step
+    is finished) and at least ``min_steps`` steps have run, so that a run on
+    a slow host still measures the same amount of work."""
+    t, n = time.perf_counter(), 0
+    while n < min_steps or time.perf_counter() - t < seconds:
+        step()
+        n += 1
 
 
 # --------------------------------------------------------------- search
@@ -265,48 +318,49 @@ def search(run: Run) -> dict:
     run.detail["text_bytes"] = sum(len(t) for t in corpus.texts(vocab))
     run.phase("generate")
 
-    spark, start_s = start_session(run)
+    spark, start_cpu_s = start_session(run)
     run.phase("session")
     builds = []
     for i in range(SEARCH_BUILDS + 1):
         store = run.path(f"store{i}")
+        run.reference.run()
         with tr.op("build"), tr.layer("operators.persist"):
-            t = time.perf_counter()
+            c = run.cpu()
             write_index(build_index(load_table(
                 spark, inputs if i else warm_inputs, "documents")), store)
-            builds.append(time.perf_counter() - t)
+            builds.append(run.cpu() - c)
         files, size = tree_size(store)
         run.add("operators.persist.files_written", files)
         run.add("operators.persist.bytes_written", size)
-    run.detail["warm_build_s"] = builds.pop(0)
+    run.detail["warm_build_cpu_s"] = builds.pop(0)
     serve = run.path(f"store{SEARCH_BUILDS}")
     run.detail["store_bytes_per_text_byte"] = (
         tree_size(serve)[1] / run.detail["text_bytes"])
-    setup_s = start_s + statistics.median(builds)
+    setup_cpu_s = start_cpu_s + statistics.median(builds)
     run.phase("builds")
 
     client = SearchClient(run, serve, queries, expected)
-    for _ in range(WARM_QUERIES):
-        client.query("warm")
-    client.batch()
-    run.reset_samples()
-    run.phase("warm")
 
     def step():
         for _ in range(QUERIES_PER_BATCH):
             client.query("query")
         client.batch()
+    for _ in range(WARM_STEPS["search"]):
+        step()
+    settle_jit()
+    run.reset_samples()
+    run.phase("warm")
+
     if not run.args.trace:
-        closed_loop(step, run.args.seconds,
-                    lambda: run.enough("query", "batch"))
+        closed_loop(step, run.args.seconds, MIN_STEPS[run.args.workload])
     else:
         search_traced(run, client, inputs)
     run.phase("measure")
 
     return {
-        "request_p50_ms": run.p50_ms("query"),
-        "items_per_s": run.items_per_s("query", "batch"),
-        "setup_s": setup_s,
+        "request_cpu_ms": 1000 * run.op_cpu_s("query"),
+        "items_per_cpu_s": run.items_per_cpu_s("query", "batch"),
+        "setup_s": run.reference.scale() * setup_cpu_s,
     }
 
 
@@ -474,16 +528,17 @@ def dedup(run: Run) -> dict:
     vec_pairs = []
     run.phase("generate")
 
-    spark, start_s = start_session(run)
+    spark, start_cpu_s = start_session(run)
     run.phase("session")
     prepares = []
     for _ in range(PREPARES):
+        run.reference.run()
         with tr.op("load"), tr.layer("sources.io"):
-            t = time.perf_counter()
+            c = run.cpu()
             for name in ("documents", "embeddings"):
                 load_table(spark, inputs, name).count()
-            prepares.append(time.perf_counter() - t)
-    setup_s = start_s + statistics.median(prepares)
+            prepares.append(run.cpu() - c)
+    setup_cpu_s = start_cpu_s + statistics.median(prepares)
     run.phase("prepare")
 
     def text_pass() -> None:
@@ -526,13 +581,14 @@ def dedup(run: Run) -> dict:
     def step():
         text_pass()
         vector_pass()
-    step()
+    for _ in range(WARM_STEPS["dedup"]):
+        step()
+    settle_jit()
     run.reset_samples()
     run.phase("warm")
 
     if not run.args.trace:
-        closed_loop(step, run.args.seconds,
-                    lambda: run.enough("text_dedup", "vector_dedup"))
+        closed_loop(step, run.args.seconds, MIN_STEPS[run.args.workload])
     else:
         dedup_layers_traced(run, spark, inputs, text_pass, vector_pass)
         run.add("operators.similarity.verify_yield", vec_pairs[-1] / max(
@@ -544,9 +600,9 @@ def dedup(run: Run) -> dict:
     run.add("operators.dedup.recall", run.detail["text_recall"])
     run.add("operators.similarity.recall", run.detail["vector_recall"])
     return {
-        "request_p50_ms": run.p50_ms("text_dedup"),
-        "items_per_s": run.items_per_s("text_dedup", "vector_dedup"),
-        "setup_s": setup_s,
+        "request_cpu_ms": 1000 * run.op_cpu_s("text_dedup"),
+        "items_per_cpu_s": run.items_per_cpu_s("text_dedup", "vector_dedup"),
+        "setup_s": run.reference.scale() * setup_cpu_s,
     }
 
 
@@ -649,10 +705,15 @@ def main(argv=None) -> int:
             try:
                 e2e = WORKLOADS[args.workload](run)
                 prov = provenance(run)
+                run.detail["jit_cpu_s"] = tree_cpu_s(os.getpid())[1]
             finally:
                 stop_session(run, sampler)
                 run.phase("stop")
         run.detail["peak_rss_mb"] = sampler.peak_bytes / 2**20
+        run.detail["reference_loop_s"] = run.reference.times
+        run.detail["wall_p50_ms"] = {
+            k: 1000 * statistics.median(x[0] for x in v)
+            for k, v in run.samples.items()}
     finally:
         shutil.rmtree(run.work, ignore_errors=True)
 
@@ -672,7 +733,7 @@ def main(argv=None) -> int:
                 wall_s=time.time() - t0)
     record = {"provenance": prov, "detail": run.detail,
               "end_to_end": e2e,
-              "samples": {k: [[round(dt, 6), round(st, 4)] for dt, st, _ in v]
+              "samples": {k: [[round(dt, 6), round(dc, 3)] for dt, dc, _ in v]
                           for k, v in run.samples.items()},
               "result": result}
     os.makedirs(args.out, exist_ok=True)

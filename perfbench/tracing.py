@@ -57,6 +57,10 @@ EXTRAS = {
 # SQL executions searched for a span's scans (a span runs a few queries).
 RECENT_EXECUTIONS = 16
 
+CLK_TCK = os.sysconf("SC_CLK_TCK")
+# Names of the HotSpot threads that compile and sweep JIT code.
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre", "Sweeper thread")
+
 # Run-level tracing metrics.
 TRACE_METRICS = ("trace.layer_self_share", "trace.overhead_ms_per_span")
 
@@ -334,6 +338,45 @@ class RssSampler:
                 pass
         self.peak_bytes = max(self.peak_bytes, total)
         return total
+
+
+def tree_cpu_s(pid: int) -> tuple[float, float]:
+    """CPU time (user + system) used so far by ``pid``, its descendants (the
+    JVM and its Python workers) and the children they have reaped, and the
+    part of it spent by the JVM's JIT compiler threads.
+
+    Unlike wall time, CPU time leaves out the time the hypervisor takes
+    from the VM (CPU steal), which on a shared host varies from run to run.
+    The JIT share is read per thread, so it is exact only while compiler
+    threads live as long as the JVM (``-XX:-UseDynamicNumberOfCompilerThreads``).
+    """
+    total = jit = 0
+    for p in [pid, *descendants(pid)]:
+        try:
+            comm, ticks = _stat(f"/proc/{p}/stat")
+        except OSError:             # exited; its time is in its parent's
+            continue
+        total += ticks
+        if comm != "java":
+            continue
+        for t in os.listdir(f"/proc/{p}/task"):
+            try:
+                comm, ticks = _stat(f"/proc/{p}/task/{t}/stat")
+            except OSError:
+                continue
+            if comm.startswith(JIT_THREADS):
+                jit += ticks
+    return total / CLK_TCK, jit / CLK_TCK
+
+
+def _stat(path: str) -> tuple[str, int]:
+    """(command name, utime + stime + cutime + cstime in clock ticks) from a
+    /proc stat file; for a thread the reaped-children fields are 0."""
+    with open(path) as f:
+        stat = f.read()
+    end = stat.rfind(")")
+    fields = stat[end + 2:].split()
+    return stat[stat.find("(") + 1:end], sum(int(x) for x in fields[11:15])
 
 
 def descendants(pid: int) -> list[int]:
