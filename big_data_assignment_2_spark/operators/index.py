@@ -128,11 +128,12 @@ def build_index(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     keyed the same way can share one exchange"): when the index is built
     TO BE PERSISTED bucket-partitioned, pass the same bucket count as
     ``write_index``/``partition_postings_by_term_bucket``.  The token
-    stream is then hash-partitioned ONCE on (term_bucket, term) — the
+    stream is then hash-partitioned ONCE on ``term_bucket`` alone — the
     postings aggregation's required clustering by (term_bucket, term,
     doc_id) is satisfied by that partitioning (a subset of the grouping
     key), so the aggregate adds NO second exchange, and the writer skips
-    its repartition because every row of a bucket is already co-located.
+    its repartition because every row of a bucket is already in ONE
+    partition — so each ``term_bucket=N/`` directory gets one file.
     Build+persist pays one wide shuffle of the token stream instead of
     two (tokens for the agg + the whole postings relation again for the
     layout).  term_document then carries a ``term_bucket`` column
@@ -149,7 +150,7 @@ def build_index(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                               term_bucket(F.col("term"), term_buckets)
                               .alias("term_bucket",
                                      metadata={"n_buckets": term_buckets}))
-                  .repartition(F.col("term_bucket"), F.col("term")))
+                  .repartition(F.col("term_bucket")))
         postings = tokens.groupBy("term_bucket", "term", "doc_id").agg(
             F.count("*").cast("int").alias("tf"),
             F.sort_array(F.collect_list("position")).alias("positions"),

@@ -27,6 +27,16 @@ from .lifecycle import (append_tombstones, atomic_rewrite,
                         drop_tombstones, hadoop_delete, hadoop_fs,
                         hadoop_rename, mask_tombstones, read_tombstones)
 
+# Declared read schemas of the three index relations, as far as the BM25
+# probe reads them.  A declared schema skips the footer-inference job that
+# every schema-less ``spark.read.parquet`` launches; one schema serves every
+# layout because the probe never reads ``positions``/``positions_delta`` or
+# ``title``.  A store whose column types differ fails at read.
+TERM_DOCUMENT_READ_SCHEMA = \
+    "term string, doc_id string, tf int, term_bucket int"
+DOCUMENT_FREQUENCY_READ_SCHEMA = "term string, df long"
+DOCUMENTS_INFO_READ_SCHEMA = "doc_id string, length int"
+
 
 def write_index(index: dict[str, DataFrame], base_path: str,
                 term_buckets: int = 16,
@@ -297,12 +307,12 @@ def partition_postings_by_term_bucket(postings: DataFrame, path: str,
 
     When ``postings`` already carries a ``term_bucket`` column (a
     build_index(term_buckets=N) lineage — r18), the rows are already
-    hash-clustered on (term_bucket, term) by the build's single exchange,
-    so the writer skips its repartition outright (guide §2.4): every
-    bucket's rows are co-located and each write task emits into only the
-    bucket directories it holds.  The column's metadata pins the bucket
-    count the builder used — a mismatch with ``n_buckets`` fails fast
-    here instead of silently laying out directories probes won't find."""
+    hash-partitioned on term_bucket by the build's single exchange, so
+    the writer skips its repartition outright (guide §2.4): every
+    bucket's rows sit in one task, which writes that bucket's one file.
+    The column's metadata pins the bucket count the builder used — a
+    mismatch with ``n_buckets`` fails fast here instead of silently
+    laying out directories probes won't find."""
     if "term_bucket" in postings.columns:
         meta = postings.schema["term_bucket"].metadata or {}
         built_n = meta.get("n_buckets")
@@ -329,9 +339,10 @@ def probe_postings(spark: SparkSession, path: str, terms: list[str],
                    n_buckets: int = 16) -> DataFrame:
     """Term probe against bucket-partitioned postings: the bucket predicate
     prunes directories BEFORE any row is read — the Spark analogue of the
-    reference's single-partition Cassandra reads (`query.py:114-118`)."""
+    reference's single-partition Cassandra reads (`query.py:114-118`).
+    Reads the :data:`TERM_DOCUMENT_READ_SCHEMA` columns."""
     buckets = sorted({_py_bucket(t, n_buckets) for t in terms})
-    df = spark.read.parquet(path)
+    df = spark.read.schema(TERM_DOCUMENT_READ_SCHEMA).parquet(path)
     return df.filter(F.col("term_bucket").isin(buckets)
                      & F.col("term").isin(terms))
 
@@ -362,10 +373,22 @@ def export_reference_format(index: dict[str, DataFrame], base_path: str) -> None
 
 def _bm25_probe_relations(spark: SparkSession, base_path: str,
                           terms: list[str], n_buckets: int = 16):
-    """The shared read side of every persisted-BM25 probe: ONE
-    bucket-pruned postings scan for ``terms``, the df append-log summed
-    at read time, doc stats, and tombstone masking — returns
-    (postings, dfreq, stats) ready for any bm25 scoring shape.
+    """The shared read side of every persisted-BM25 probe.  It runs the
+    first of the probe's two steps and prepares the second:
+
+    1. **Stats collect** — ONE driver query returns N and avgdl over the
+       doc stats (Spark's own ``count``/``avg``, so the literals equal the
+       in-plan values of the in-flight path bit for bit) and the df of
+       each probed term.  The doc-stats rows form the NULL-term group of
+       one ``groupBy("term")``; the df log's rows form one group per term.
+    2. **Scoring inputs** — the bucket-pruned postings scan restricted to
+       the LIVE terms (df > 0) and the doc lengths, both ready to join.
+
+    Returns ``(postings, lengths, n, avgdl, df)``; ``df`` maps each live
+    term to its df and is empty when no probed term is live.  Every
+    relation is read with its declared schema (no footer inference).
+    Nothing is cached between calls: each call re-reads the store, so a
+    probe sees every earlier ``append_to_index``/``delete_from_index``.
 
     - df log: after append_to_index the relation holds one row per
       (term, batch); batch doc sets are disjoint so the union df is the
@@ -373,72 +396,116 @@ def _bm25_probe_relations(spark: SparkSession, base_path: str,
       identity) — the same read-time re-aggregation contract as the
       fingerprint store's keys log.
     - Tombstoned docs (delete_from_index) are masked at read time from
-      postings AND stats (N/avgdl are aggregates over stats, so they
-      follow), and their df contribution is SUBTRACTED — derived from
-      the probed terms' postings rows themselves (one row per
-      (term, doc), so a per-term count of tombstoned rows is the exact
+      postings AND doc lengths (N/avgdl are aggregates over the lengths,
+      so they follow), and their df contribution is SUBTRACTED inside
+      the same stats collect: each tombstoned postings row of a probed
+      term adds df −1 (one row per (term, doc), so this is the exact
       correction; the rows are still on disk until compact_index).  No
       full-index pass ever lands on the query path."""
-    postings = probe_postings(spark, f"{base_path}/term_document", terms,
+    def read(rel: str, schema: str) -> DataFrame:
+        return spark.read.schema(schema).parquet(f"{base_path}/{rel}")
+
+    def scan(ts: list[str]) -> DataFrame:
+        return probe_postings(spark, f"{base_path}/term_document", ts,
                               n_buckets).drop("term_bucket")
-    dfreq = (spark.read.parquet(f"{base_path}/document_frequency")
-             .filter(F.col("term").isin(terms))
-             .groupBy("term").agg(F.sum("df").cast("long").alias("df")))
-    stats = spark.read.parquet(f"{base_path}/documents_info")
+
+    no_len = F.lit(None).cast("int").alias("length")
+    lengths = read("documents_info", DOCUMENTS_INFO_READ_SCHEMA)
+    dfs = (read("document_frequency", DOCUMENT_FREQUENCY_READ_SCHEMA)
+           .filter(F.col("term").isin(terms))
+           .select("term", no_len, "df"))
     tomb = _index_tombstones(spark, base_path)
     if tomb is not None:
         tomb_docs = tomb.withColumnRenamed("__del_doc", "doc_id")
-        delta = (postings.join(tomb_docs, "doc_id", "left_semi")
-                 .groupBy("term").agg(F.count("*").alias("__ddf")))
-        dfreq = (dfreq.join(delta, "term", "left")
-                 .select("term", (F.col("df") - F.coalesce("__ddf", F.lit(0)))
-                         .cast("long").alias("df"))
-                 .filter(F.col("df") > 0))
+        lengths = lengths.join(tomb_docs, "doc_id", "left_anti")
+        dfs = dfs.unionByName(
+            scan(terms).join(tomb_docs, "doc_id", "left_semi")
+            .select("term", no_len, F.lit(-1).cast("long").alias("df")))
+    rows = (lengths.select(F.lit(None).cast("string").alias("term"),
+                           "length", F.lit(None).cast("long").alias("df"))
+            .unionByName(dfs)
+            .groupBy("term")
+            .agg(F.count("*").alias("n"), F.avg("length").alias("avgdl"),
+                 F.sum("df").alias("df"))
+            .collect())
+    n, avgdl, df = 0, None, {}
+    for r in rows:
+        if r["term"] is None:
+            n, avgdl = r["n"], r["avgdl"]
+        elif r["df"] > 0:
+            df[r["term"]] = r["df"]
+    postings = scan(sorted(df))
+    if tomb is not None:
         postings = postings.join(tomb_docs, "doc_id", "left_anti")
-        stats = stats.join(tomb_docs, "doc_id", "left_anti")
-    return postings, dfreq, stats
+    return postings, lengths, n, avgdl, df
 
 
 def bm25_probe_persisted(spark: SparkSession, base_path: str, query: str,
                          k: int = 10, n_buckets: int = 16) -> "DataFrame":
-    """Serving-path BM25: probe a PERSISTED index (term-bucket-pruned
-    postings scan + broadcast joins) — the amortized-latency shape a query
-    service runs, vs. the build-everything-in-flight declared query."""
+    """Serving-path BM25 over a PERSISTED index, in two steps: the stats
+    collect of :func:`_bm25_probe_relations` (one driver query for N,
+    avgdl and the probed terms' df), then ONE scoring plan — the
+    bucket-pruned postings of the live terms ⋈ doc lengths, the BM25
+    expression over those literals (a query term's multiplicity is a
+    literal weight), per-doc sum, ``round(·, 6)``, top-k by
+    (score desc, doc_id asc).  No state is cached between calls.  Same
+    rows as the in-flight ``search.bm25_topk`` over the same corpus; a
+    query with no live term returns no rows."""
+    from collections import Counter
+
     from ..functions.text import tokenize_query
-    from ..operators.search import bm25_topk
+    from .search import bm25_literal_score
 
     terms = tokenize_query(query)
-    postings, dfreq, stats = _bm25_probe_relations(
+    postings, lengths, n, avgdl, df = _bm25_probe_relations(
         spark, base_path, terms, n_buckets)
-    return bm25_topk(spark, query, postings, dfreq, stats, k=k)
+    if not df:
+        return spark.createDataFrame([], "doc_id string, score double")
+    score = bm25_literal_score(n, avgdl, df,
+                               Counter(t for t in terms if t in df))
+    return (postings.join(lengths, "doc_id")
+            .groupBy("doc_id").agg(F.round(F.sum(score), 6).alias("score"))
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
 def bm25_probe_persisted_batch(spark: SparkSession, base_path: str,
                                queries: dict[str, str], k: int = 10,
                                n_buckets: int = 16) -> "DataFrame":
     """BATCHED serving-path BM25 (r13, VERDICT r12 #4): serve MANY
-    queries from the persisted index with ONE bucket-pruned postings
-    scan — the amortization a real query service runs.  The probe plans
-    the UNION of all queries' terms (so the bucket-pruned scan, the df
-    log read, and the tombstone masking each happen once), then scores
-    per query_id via the ``search.bm25_topk_batch`` shape (broadcast
-    (query_id, term) relation, per-query window top-k).  Q sequential
-    ``bm25_probe_persisted`` calls would pay Q scans, Q df reads, and Q
-    Spark jobs; the batch pays one of each — sublinear in Q by
-    construction, measured in bench.py (`search_bm25_batch_probe`).
+    queries from the persisted index with ONE stats collect and ONE
+    bucket-pruned postings scan over the UNION of all queries' terms —
+    the amortization a real query service runs.  Scoring joins the
+    broadcast (query_id, term) relation (one row per scoring occurrence)
+    to the postings, applies the same literal BM25 expression as
+    :func:`bm25_probe_persisted`, and ranks with a per-query window
+    top-k.  Q sequential ``bm25_probe_persisted`` calls would pay Q stats
+    collects and Q scoring plans; the batch pays one of each — measured
+    in bench.py (`search_bm25_batch_probe`).
 
     Composes with the full index lifecycle: append-log df summing and
     tombstone df-subtraction come from the shared
     :func:`_bm25_probe_relations` read side, so a batch probe after
     delete_from_index equals per-query probes over the shrunk corpus.
     Returns (query_id, doc_id, score, rank ≤ k)."""
+    from ..functions.localrel import inline_rows
     from ..functions.text import tokenize_query
-    from ..operators.search import bm25_topk_batch
+    from .search import bm25_literal_score, rank_per_query
 
-    terms = sorted({t for q in queries.values() for t in tokenize_query(q)})
-    postings, dfreq, stats = _bm25_probe_relations(
-        spark, base_path, terms, n_buckets)
-    return bm25_topk_batch(spark, queries, postings, dfreq, stats, k=k)
+    q_terms = [(qid, t) for qid, q in queries.items()
+               for t in tokenize_query(q)]
+    postings, lengths, n, avgdl, df = _bm25_probe_relations(
+        spark, base_path, sorted({t for _, t in q_terms}), n_buckets)
+    rows = [(qid, t) for qid, t in q_terms if t in df]
+    if not rows:
+        return spark.createDataFrame(
+            [], "query_id string, doc_id string, score double, rank int")
+    terms_df = inline_rows(spark, rows, "query_id string, term string")
+    scored = (postings.join(F.broadcast(terms_df), "term")
+              .join(lengths, "doc_id")
+              .groupBy("query_id", "doc_id")
+              .agg(F.round(F.sum(bm25_literal_score(n, avgdl, df)), 6)
+                   .alias("score")))
+    return rank_per_query(scored, k)
 
 
 def write_ivf(assigned: DataFrame, path: str) -> None:

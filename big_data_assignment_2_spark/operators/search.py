@@ -2,10 +2,23 @@
 
 The reference's query path is driver-side Python: per-term Cassandra point
 reads (`app/query.py:97-139`), a Python scoring loop (`:182-190`), and one
-RDD ``reduceByKey`` (`:193-194`).  Here the whole query is ONE Catalyst plan:
+RDD ``reduceByKey`` (`:193-194`).  Here a query over an IN-FLIGHT index
+(``bm25_topk`` and friends) is ONE Catalyst plan:
 
     query terms ⋈ postings ⋈ doc_freq ⋈ doc_stats
       → BM25 expr → groupBy(doc).sum → TakeOrderedAndProject(k)
+
+A probe of a PERSISTED index (``persist.bm25_probe_persisted``) runs in
+two steps instead, each a handful of Spark jobs:
+
+1. stats collect — one driver query for N, avgdl and the probed terms'
+   df (the reference's point reads, `query.py:63-80, 114-139`);
+2. scoring plan — bucket-pruned postings ⋈ doc lengths → BM25 expr over
+   those literals (:func:`bm25_literal_score`) → groupBy(doc).sum →
+   TakeOrderedAndProject(k).
+
+No state is cached between calls: the store may change between probes
+(``append_to_index``, ``delete_from_index``), so every call re-reads it.
 
 Scale notes (100 TB):
 - The query-term relation is a handful of rows → ``broadcast()`` it so the
@@ -24,7 +37,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localrel import inline_rows
@@ -93,8 +106,6 @@ def bm25_topk_batch(spark: SparkSession, queries: dict[str, str],
     into a single pass over the index instead of |Q| sequential jobs.
     Returns (query_id, doc_id, score, rank).
     """
-    from pyspark.sql import Window
-
     rows = [(qid, t) for qid, q in queries.items() for t in tokenize_query(q)]
     if not rows:
         return spark.createDataFrame(
@@ -115,9 +126,39 @@ def bm25_topk_batch(spark: SparkSession, queries: dict[str, str],
                                     F.col("length"), F.col("__avgdl"), k1, b))
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("term_score"), 6).alias("score")))
+    return rank_per_query(scored, k)
+
+
+def rank_per_query(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of a (query_id, doc_id, score) relation by
+    (score desc, doc_id asc), numbered in a ``rank`` column (window
+    row_number — one partition per query, never a global sort)."""
+    from pyspark.sql import Window
+
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
+
+
+def _term_lookup(values: dict) -> Column:
+    """``values[term]`` for the row's ``term``, as a literal map lookup."""
+    return F.create_map(*[F.lit(x) for kv in sorted(values.items())
+                          for x in kv])[F.col("term")]
+
+
+def bm25_literal_score(n: int, avgdl: float, df: dict[str, int],
+                       weight: dict[str, int] | None = None,
+                       k1: float = K1_DEFAULT, b: float = B_DEFAULT) -> Column:
+    """Per-(term, doc) BM25 partial score of a row's ``term``, ``tf`` and
+    ``length`` with the corpus statistics as LITERALS — N, avgdl and a
+    term→df map collected by the caller (the persisted probe's stats
+    step).  The same :func:`bm25_term_score`/:func:`idf_plain`
+    expressions as the in-plan path, so the same values.  ``weight``
+    multiplies each term's score by its multiplicity in the query (the
+    in-plan path joins one query-term row per occurrence instead)."""
+    score = bm25_term_score(F.col("tf"), idf_plain(_term_lookup(df), n),
+                            F.col("length"), avgdl, k1, b)
+    return score if weight is None else score * _term_lookup(weight)
 
 
 def _bm25_scores_from_terms(terms_df: DataFrame, term_document: DataFrame,

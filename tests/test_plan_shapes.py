@@ -105,17 +105,10 @@ def test_no_accidental_cartesian_in_any_query(spark, sf_dir):
 
     INTENTIONAL = {
         # broadcast 1-row stats relation / tiny query-set scoring
-        # (append_probe shares bm25_topk's scoring plan verbatim)
         "search_bm25_topk", "search_bm25_batch",
-        "search_bm25_append_probe",
         # BM25 over the CJK bigram index reuses the same
         # _bm25_scores_from_terms plan (broadcast 1-row N+avgdl) (r17)
         "search_bm25_cjk",
-        # delete/compact probes share bm25_topk's scoring plan verbatim too
-        "search_bm25_delete_probe", "search_bm25_compact_probe",
-        # batched persisted probe: bm25_topk_batch's broadcast 1-row
-        # stats relation over the shared probe read side (r13)
-        "search_bm25_batch_probe",
         # exact baseline scores every vector against the broadcast query
         # set by definition (the scale paths are sim_ann_lsh / IVF)
         "sim_ann_bruteforce", "sim_ann_lsh",
@@ -185,10 +178,6 @@ def test_no_accidental_cartesian_in_any_query(spark, sf_dir):
         # bm25f, each with its broadcast 1-row stats relation); the
         # metric math itself is equi-joins + windows (r14)
         "search_eval_ndcg",
-        # gap-encoded store probe IS bm25_probe_persisted (broadcast
-        # 1-row stats relation, same as every bm25 row) — the delta
-        # layout never changes the probe plan (r15)
-        "search_bm25_probe_delta",
         # prefix expansion: wildcards × VOCABULARY theta-join (the
         # PrefixQuery rewrite — same shape as search_fuzzy_topk), then
         # bm25's broadcast 1-row stats relation (r15)

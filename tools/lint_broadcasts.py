@@ -74,6 +74,10 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
         "(EVAL_MAX_ID docs), not the training corpus",
     (f"{PKG}/plans/text_queries.py", "q_upsample", "plan"):
         "per-language sampling plan: bounded by the language enum",
+    # --- operators/persist.py ---
+    (f"{PKG}/operators/persist.py", "bm25_probe_persisted_batch",
+     "terms_df"):
+        "(query_id, term) relation: bounded by the batch's query terms",
     # --- operators/relational.py ---
     (f"{PKG}/operators/relational.py", "global_rank", "offsets"):
         "per-partition offsets: one row per shuffle partition",
