@@ -138,9 +138,12 @@ def build_index(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     two (tokens for the agg + the whole postings relation again for the
     layout).  term_document then carries a ``term_bucket`` column
     (metadata-tagged with the count so the writer can fail fast on a
-    mismatched bucket count); leave the default ``None`` for in-flight
-    (non-persisted) indexes — partitioning by ≤term_buckets distinct
-    values would cap the aggregation's parallelism for no layout gain.
+    mismatched bucket count).  The price: partitioning by ≤term_buckets
+    distinct values caps the postings aggregation (and the write) at
+    term_buckets tasks, fewer where buckets collide in the hash — pick
+    term_buckets ≥ the cores the build runs on.  Leave the default
+    ``None`` for in-flight (non-persisted) indexes, where that cap buys
+    no layout gain.
     """
     tokens = tokenize_positions(docs, text_col, id_col)
     if term_buckets is not None:

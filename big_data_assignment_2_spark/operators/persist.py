@@ -396,12 +396,14 @@ def _bm25_probe_relations(spark: SparkSession, base_path: str,
       identity) — the same read-time re-aggregation contract as the
       fingerprint store's keys log.
     - Tombstoned docs (delete_from_index) are masked at read time from
-      postings AND doc lengths (N/avgdl are aggregates over the lengths,
-      so they follow), and their df contribution is SUBTRACTED inside
-      the same stats collect: each tombstoned postings row of a probed
-      term adds df −1 (one row per (term, doc), so this is the exact
-      correction; the rows are still on disk until compact_index).  No
-      full-index pass ever lands on the query path."""
+      the doc lengths (N/avgdl are aggregates over the lengths, so they
+      follow; their postings rows drop at the scoring plan's inner
+      join with the masked lengths), and their df contribution is
+      SUBTRACTED inside the same stats collect: each tombstoned postings
+      row of a probed term adds df −1 (one row per (term, doc), so this
+      is the exact correction; the rows are still on disk until
+      compact_index).  No full-index pass ever lands on the query
+      path."""
     def read(rel: str, schema: str) -> DataFrame:
         return spark.read.schema(schema).parquet(f"{base_path}/{rel}")
 
@@ -434,10 +436,7 @@ def _bm25_probe_relations(spark: SparkSession, base_path: str,
             n, avgdl = r["n"], r["avgdl"]
         elif r["df"] > 0:
             df[r["term"]] = r["df"]
-    postings = scan(sorted(df))
-    if tomb is not None:
-        postings = postings.join(tomb_docs, "doc_id", "left_anti")
-    return postings, lengths, n, avgdl, df
+    return scan(sorted(df)), lengths, n, avgdl, df
 
 
 def bm25_probe_persisted(spark: SparkSession, base_path: str, query: str,

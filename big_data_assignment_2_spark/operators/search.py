@@ -147,8 +147,7 @@ def _term_lookup(values: dict) -> Column:
 
 
 def bm25_literal_score(n: int, avgdl: float, df: dict[str, int],
-                       weight: dict[str, int] | None = None,
-                       k1: float = K1_DEFAULT, b: float = B_DEFAULT) -> Column:
+                       weight: dict[str, int] | None = None) -> Column:
     """Per-(term, doc) BM25 partial score of a row's ``term``, ``tf`` and
     ``length`` with the corpus statistics as LITERALS — N, avgdl and a
     term→df map collected by the caller (the persisted probe's stats
@@ -157,7 +156,7 @@ def bm25_literal_score(n: int, avgdl: float, df: dict[str, int],
     multiplies each term's score by its multiplicity in the query (the
     in-plan path joins one query-term row per occurrence instead)."""
     score = bm25_term_score(F.col("tf"), idf_plain(_term_lookup(df), n),
-                            F.col("length"), avgdl, k1, b)
+                            F.col("length"), avgdl)
     return score if weight is None else score * _term_lookup(weight)
 
 
