@@ -235,8 +235,7 @@ def main() -> None:
     medians: dict[str, float] = {}
     loadavg: dict[str, list[float]] = {}
     stream_drain: dict[str, dict] = {}
-    # On-disk store sizes (r17, VERDICT r16 #8): the gap-encoded layout's
-    # claimed win is storage — price it next to the serving rows.
+    # On-disk store sizes, reported next to the serving rows.
     store_bytes: dict[str, int] = {}
 
     def timed_runs(fn, n: int, name: str | None = None) -> list[float]:
@@ -361,44 +360,16 @@ def main() -> None:
                    spark, ixdir, BATCH_QUERIES, k=5),
                    REPEATS + EXTRA_REPEATS, "search_bm25_batch_probe"),
                extra_timings)
-        # Plain-store positional consumer: the baseline the delta rows
-        # below compare against (same index, same session).
+        # Positional consumer over the persisted store.
         from big_data_assignment_2_spark.operators.persist import read_index
         from big_data_assignment_2_spark.operators.search import phrase_match
-        store_bytes["postings_plain"] = _tree_bytes(
+        store_bytes["postings"] = _tree_bytes(
             os.path.join(ixdir, "term_document"))
         record("search_phrase_probe",
                timed_runs(lambda: phrase_match(
                    read_index(spark, ixdir)["term_document"],
                    ["vector", "query"]),
                    REPEATS + EXTRA_REPEATS, "search_phrase_probe"),
-               extra_timings)
-
-    # Gap-encoded store on the SERVING path (r16, VERDICT r15 #6): the
-    # storage win (0.18x postings on long docs) is certified elsewhere;
-    # these rows PRICE the read side.  BM25 never reads positions, so
-    # probe_delta must be in-band with search_bm25_probe_persisted (the
-    # column-pruned scan makes the layout invisible); phrase_delta pays
-    # the aggregate-fold decode and is directly comparable to
-    # search_phrase_probe above — the honest decode cost, not just the
-    # storage win.  Build is untimed setup (amortized serving, as with
-    # every probe row).
-    with tempfile.TemporaryDirectory() as dxdir:
-        write_index(build_index(load_table(spark, sf_dir, "documents"),
-                        term_buckets=16),
-                    dxdir, delta_positions=True)
-        store_bytes["postings_delta"] = _tree_bytes(
-            os.path.join(dxdir, "term_document"))
-        record("search_bm25_probe_delta",
-               timed_runs(lambda: bm25_probe_persisted(
-                   spark, dxdir, FLAGSHIP_QUERY),
-                   REPEATS + EXTRA_REPEATS, "search_bm25_probe_delta"),
-               extra_timings)
-        record("search_phrase_probe_delta",
-               timed_runs(lambda: phrase_match(
-                   read_index(spark, dxdir)["term_document"],
-                   ["vector", "query"]),
-                   REPEATS + EXTRA_REPEATS, "search_phrase_probe_delta"),
                extra_timings)
 
     # ANN serving path (round 10, VERDICT r9 #1): train the IVF+PQ index
@@ -609,9 +580,7 @@ def main() -> None:
         # min run (start/drain wall + summed triggerExecution ms), so
         # harness startup is separable from drain (VERDICT r13 #4).
         "stream_drain": stream_drain,
-        # On-disk postings bytes, plain vs gap-encoded (same corpus,
-        # same bucketing): the layout's storage price/win beside its
-        # serving rows (VERDICT r16 #8).
+        # On-disk postings bytes of the persisted search store.
         "store_bytes": store_bytes,
     }
     local_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),

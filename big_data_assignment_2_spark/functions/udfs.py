@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from .rounding import spark_round6_array
+
 
 @pandas_udf(DoubleType())
 def shannon_entropy(texts: pd.Series) -> pd.Series:
@@ -51,8 +53,6 @@ def minmax_scale_by_group(df, group_col: str, value_col: str,
     the 100-TB path: a grouped map materializes every group in one
     executor's memory, so few-valued group keys make hot tasks.
     """
-    import numpy as np
-
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in df.schema.fields)
     schema = f"{fields}, {out_col} double"
@@ -63,10 +63,8 @@ def minmax_scale_by_group(df, group_col: str, value_col: str,
             pdf[out_col] = 0.0
         else:
             x = (pdf[value_col] - lo) / float(hi - lo)
-            # round half AWAY from zero (what Spark F.round and DuckDB
-            # round() do) — np.round is half-to-even, which diverges by
-            # 1 ulp on exact binary ties like 0.6953125
-            pdf[out_col] = np.floor(x * 1e6 + 0.5) / 1e6
+            # Spark's round(x, 6); np.round is half-to-even
+            pdf[out_col] = spark_round6_array(x.to_numpy())
         return pdf
 
     return df.groupBy(group_col).applyInPandas(fn, schema)

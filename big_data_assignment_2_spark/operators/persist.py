@@ -24,14 +24,14 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_hash64
 from .lifecycle import (append_tombstones, atomic_rewrite,
-                        drop_tombstones, hadoop_delete, hadoop_fs,
-                        hadoop_rename, mask_tombstones, read_tombstones)
+                        drop_tombstones, hadoop_delete, hadoop_rename,
+                        mask_tombstones, read_tombstones)
 
 # Declared read schemas of the three index relations, as far as the BM25
 # probe reads them.  A declared schema skips the footer-inference job that
-# every schema-less ``spark.read.parquet`` launches; one schema serves every
-# layout because the probe never reads ``positions``/``positions_delta`` or
-# ``title``.  A store whose column types differ fails at read.
+# every schema-less ``spark.read.parquet`` launches; the probe never reads
+# ``positions`` or ``title``, so they are left out.  A store whose column
+# types differ fails at read.
 TERM_DOCUMENT_READ_SCHEMA = \
     "term string, doc_id string, tf int, term_bucket int"
 DOCUMENT_FREQUENCY_READ_SCHEMA = "term string, df long"
@@ -39,41 +39,21 @@ DOCUMENTS_INFO_READ_SCHEMA = "doc_id string, length int"
 
 
 def write_index(index: dict[str, DataFrame], base_path: str,
-                term_buckets: int = 16,
-                delta_positions: bool = False) -> None:
+                term_buckets: int = 16) -> None:
     """Persist the three index tables; postings term-bucket-partitioned.
 
     The postings relation is cached across the writes: document_frequency
     is derived FROM postings (operators/index.doc_freq), so without the
     cache its write re-runs the whole tokenize+explode+agg lineage a
     second time — at 100 TB that's a full extra corpus pass per index
-    build.
-
-    ``delta_positions`` (r15, VERDICT r14 #7): store positions arrays
-    gap-encoded (:func:`delta_encode_positions` — the Lucene postings
-    layout).  The encoded store is SELF-DESCRIBING (r16 advice): the
-    stored column is renamed ``positions_delta``, so a reader can never
-    silently consume gap values as absolute positions — ``read_index``
-    auto-detects the layout from the schema and fails fast on a
-    flag/layout contradiction, and ``append_to_index`` encodes each
-    batch to match the live store.  The BM25 probe path never reads
-    positions (column-pruned at the scan), so scoring over an encoded
-    store is identical with no flag; positional consumers
-    (phrase/snippet/proximity) decode through read_index."""
+    build.  Positions are stored as the reference's absolute
+    ``list<int>`` (`app.py:42-50`)."""
     from pyspark import StorageLevel
 
-    # Persist the UNTRANSFORMED postings: document_frequency's lineage
-    # matches this plan, so its write hits the cache; the delta encode
-    # rides on top as a projection of the cached relation.
     td = index["term_document"].persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        out = td
-        if delta_positions:
-            out = td.withColumn("positions",
-                                delta_encode_positions("positions")) \
-                .withColumnRenamed("positions", "positions_delta")
         partition_postings_by_term_bucket(
-            out, f"{base_path}/term_document", term_buckets)
+            td, f"{base_path}/term_document", term_buckets)
         index["document_frequency"].write.mode("overwrite") \
             .parquet(f"{base_path}/document_frequency")
         index["documents_info"].write.mode("overwrite") \
@@ -104,30 +84,13 @@ def append_to_index(docs: DataFrame, base_path: str,
 
     The batch index is built from the incoming docs only — one batch
     pass, never a rebuild; at 100 TB this is the difference between a
-    nightly full-corpus index job and appending the day's crawl.
-
-    The batch adopts the LIVE store's positions layout (r16 advice:
-    the store is self-describing — a gap-encoded store carries
-    ``positions_delta``; appending absolute rows into it would corrupt
-    every positional consumer silently, so the batch is encoded to
-    match)."""
+    nightly full-corpus index job and appending the day's crawl."""
     from pyspark import StorageLevel
 
     from .index import build_index
 
-    spark = docs.sparkSession
-    live = f"{base_path}/term_document"
-    fs, hlive = hadoop_fs(spark, live)
-    live_delta = fs.exists(hlive) and \
-        "positions_delta" in spark.read.parquet(live).columns
-
     index = build_index(docs)
-    td = cached = index["term_document"].persist(
-        StorageLevel.MEMORY_AND_DISK)
-    if live_delta:
-        td = td.withColumn("positions",
-                           delta_encode_positions("positions")) \
-            .withColumnRenamed("positions", "positions_delta")
+    td = index["term_document"].persist(StorageLevel.MEMORY_AND_DISK)
     try:
         (td.withColumn("term_bucket", term_bucket(F.col("term"), term_buckets))
          .repartition(F.col("term_bucket"))
@@ -139,7 +102,7 @@ def append_to_index(docs: DataFrame, base_path: str,
         index["documents_info"].write.mode("append") \
             .parquet(f"{base_path}/documents_info")
     finally:
-        cached.unpersist()
+        td.unpersist()
 
 
 def delete_from_index(spark: SparkSession, base_path: str, doc_ids) -> None:
@@ -214,76 +177,14 @@ def compact_index(spark: SparkSession, base_path: str) -> None:
     drop_tombstones(spark, base_path)
 
 
-def read_index(spark: SparkSession, base_path: str,
-               delta_positions: bool = False) -> dict[str, DataFrame]:
-    """Logical view of a persisted index: always presents ABSOLUTE
-    positions under ``positions``, whatever the stored layout.  The
-    layout is read from the store itself (a gap-encoded store carries
-    ``positions_delta`` instead of ``positions`` — r16 advice: the two
-    layouts were previously indistinguishable on disk, so a missing or
-    spurious flag silently fed gap values to positional consumers as
-    absolute positions).  ``delta_positions`` survives as an optional
-    ASSERTION about what the caller expects to find: True on a
-    plain-layout store fails fast instead of double-decoding.
-
-    FORMAT BREAK (r16): stores written by the r15-era encoder kept gaps
-    under the plain ``positions`` name — such a store (none can exist in
-    this harness: every store lives in pid-keyed process-lifetime
-    scratch) would auto-detect as plain and serve gaps as absolutes.
-    Any long-lived deployment upgrading across r16 must rewrite
-    delta stores once (read with the r15 code, write with this one);
-    asserting ``delta_positions=True`` on such a store fails fast
-    below rather than double-decoding."""
-    td = spark.read.parquet(f"{base_path}/term_document")
-    is_delta = "positions_delta" in td.columns
-    if delta_positions and not is_delta:
-        raise ValueError(
-            f"index at {base_path} carries a 'positions' column but "
-            f"delta_positions=True was asserted — either this is a plain "
-            f"store (drop the flag; layout is auto-detected) or an "
-            f"r15-era gap-encoded store predating the self-describing "
-            f"'positions_delta' layout (rewrite it; see read_index "
-            f"docstring) — refusing to guess")
-    if is_delta:
-        td = td.withColumn("positions",
-                           delta_decode_positions("positions_delta")) \
-            .drop("positions_delta")
+def read_index(spark: SparkSession, base_path: str) -> dict[str, DataFrame]:
+    """Logical view of a persisted index: the three relations as
+    written, postings carrying absolute ``positions``."""
     return {
-        "term_document": td,
+        "term_document": spark.read.parquet(f"{base_path}/term_document"),
         "document_frequency": spark.read.parquet(f"{base_path}/document_frequency"),
         "documents_info": spark.read.parquet(f"{base_path}/documents_info"),
     }
-
-
-def delta_encode_positions(col):
-    """GAP-encode a sorted positions array for storage: [p0, p1, p2] →
-    [p0, p1−p0, p2−p1].  Positions are ascending by construction
-    (index.build_postings sort_array), so gaps are small non-negative
-    ints and parquet's bit-packed encoding stores them in far fewer bits
-    than absolute offsets — the classic postings-compression lever
-    (Lucene stores positions exactly this way).  Zigzag is deliberately
-    NOT layered on top: it exists to fold negatives into the unsigned
-    space (n → 2n±1), and gaps here are never negative — zigzagging
-    would WIDEN every stored value by a bit.  Pure array expression,
-    map-side, no UDF."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(
-        c, lambda x, i: F.when(i == 0, x).otherwise(x - F.get(c, i - 1)))
-
-
-def delta_decode_positions(col):
-    """Inverse of :func:`delta_encode_positions`: running-sum the gaps
-    back to absolute positions inside one ``aggregate`` fold.  The
-    accumulator append copies are bounded by tf (positions-per-posting),
-    not corpus size."""
-    c = F.col(col) if isinstance(col, str) else col
-    # try_element_at: element_at(-1) THROWS on the empty first-fold
-    # accumulator; the try_ variant yields NULL -> coalesce 0.
-    return F.aggregate(
-        c, F.array().cast("array<int>"),
-        lambda acc, x: F.concat(acc, F.array(
-            (F.coalesce(F.try_element_at(acc, F.lit(-1)), F.lit(0)) + x)
-            .cast("int"))))
 
 
 def term_bucket(col, n_buckets: int):

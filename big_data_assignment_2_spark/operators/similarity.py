@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.rounding import spark_round6, spark_round6_array
+
 NUM_PLANES = 8
 PLANE_MOD = 1009  # deterministic pseudo-random weights: ((3p+7d+11)·k) % 1009
 
@@ -1299,8 +1301,8 @@ def semdedup(vectors: DataFrame, k: int = 8, iters: int = 2,
     vector crosses the Python boundary once per cluster, the c²/2
     precedence-ordered dots are vectorized numpy with DIM-SEQUENTIAL
     accumulation (bit-identical to the old per-pair ``aggregate`` fold),
-    and the 6-dp compare uses the same half-away-from-zero rounding
-    :func:`semdedup_chain` pinned against Spark/DuckDB ``round``.  The
+    and the 6-dp compare uses Spark's ``round``
+    (:func:`spark_round6_array`), as :func:`semdedup_chain` does.  The
     cluster self-join, the drop-set distinct and the final left join
     all collapse into the one grouped pass (3 shuffles → 1).
 
@@ -1339,9 +1341,7 @@ def semdedup(vectors: DataFrame, k: int = 8, iters: int = 2,
                     acc = np.zeros(A.shape[0], dtype=np.float64)
                     for d in range(V.shape[1]):
                         acc = acc + A[:, d] * B[:, d]
-                    r6 = np.where(acc >= 0,
-                                  np.floor(acc * 1e6 + 0.5),
-                                  np.ceil(acc * 1e6 - 0.5)) / 1e6
+                    r6 = spark_round6_array(acc)
                     # Spark SQL orders NaN above every double, so the old
                     # join's round(dot) >= threshold was TRUE for a NaN
                     # dot (degenerate zero-norm vectors) — mirror it
@@ -1364,9 +1364,7 @@ def semdedup(vectors: DataFrame, k: int = 8, iters: int = 2,
                     if math.isnan(acc):
                         dropped[j] = True
                         continue
-                    r6 = (math.floor(acc * 1e6 + 0.5) / 1e6 if acc >= 0
-                          else math.ceil(acc * 1e6 - 0.5) / 1e6)
-                    if r6 >= th:
+                    if spark_round6(acc) >= th:
                         dropped[j] = True
         return pdf.assign(keep=~dropped)[cols]
 
@@ -1396,9 +1394,8 @@ def semdedup_chain(vectors: DataFrame, k: int = 8, iters: int = 2,
     The DuckDB oracle replays the identical greedy chain with a
     recursive CTE carrying each cluster's kept-vector list.
 
-    Dot products are 6-dp rounded HALF-AWAY-FROM-ZERO before the
-    threshold compare — matching Spark's and DuckDB's ``round`` (Python
-    ``round`` is banker's and would diverge on exact midpoints).
+    Dot products are 6-dp rounded exactly as Spark's ``round`` does
+    (:func:`spark_round6`) before the threshold compare.
 
     Returns (vec_id, list_id, cdist, keep)."""
     import pandas as pd
@@ -1408,8 +1405,6 @@ def semdedup_chain(vectors: DataFrame, k: int = 8, iters: int = 2,
     types = {f.name: f.dataType.simpleString() for f in sel.schema}
 
     def chain(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-
         import numpy as np
 
         pdf = (pdf.sort_values(["cdist", "vec_id"], kind="mergesort")
@@ -1421,9 +1416,7 @@ def semdedup_chain(vectors: DataFrame, k: int = 8, iters: int = 2,
             dup = False
             for kv in kept:
                 d = float(kv @ x)
-                r6 = (math.floor(d * 1e6 + 0.5) / 1e6 if d >= 0
-                      else math.ceil(d * 1e6 - 0.5) / 1e6)
-                if r6 >= threshold:
+                if spark_round6(d) >= threshold:
                     dup = True
                     break
             flags.append(not dup)
@@ -1506,17 +1499,6 @@ def mmr_rerank(candidates: DataFrame, vectors: DataFrame, k: int = 5,
 
     def greedy(cand_pdf: pd.DataFrame, pairs_pdf: pd.DataFrame) \
             -> pd.DataFrame:
-        # Spark's Round(double, 6) = HALF_UP over the SHORTEST-DECIMAL
-        # string of the double (scala BigDecimal(Double) goes through
-        # Double.toString); Python's round() is banker's and diverges on
-        # exact midpoints, so replicate Spark via decimal.
-        from decimal import ROUND_HALF_UP, Decimal
-        quant = Decimal("0.000001")
-
-        def r6(x: float) -> float:
-            return float(Decimal(repr(float(x)))
-                         .quantize(quant, rounding=ROUND_HALF_UP))
-
         if cand_pdf.empty:
             return pd.DataFrame(columns=out_cols)
         sim = {(a, b): float(s)
@@ -1539,7 +1521,7 @@ def mmr_rerank(candidates: DataFrame, vectors: DataFrame, k: int = 5,
                 pens = [sim[(nid, p)] for p in picked if (nid, p) in sim]
                 if not pens:
                     continue
-                score = r6(lam_d * rel - om_d * max(pens))
+                score = spark_round6(lam_d * rel - om_d * max(pens))
                 key = (-score, nid)
                 if best is None or key < best[0]:
                     best = (key, nid, rel)

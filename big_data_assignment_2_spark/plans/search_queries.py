@@ -66,27 +66,6 @@ def q_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join("positions", ",").alias("positions"))
 
 
-def q_postings_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-encoded postings (r15, VERDICT r14 #7): the STORED form of the
-    positions arrays under ``write_index(delta_positions=True)`` —
-    [p0, p1-p0, p2-p1, ...] (the Lucene positions layout; halves the
-    stored int magnitudes, so parquet bit-packing shrinks the postings
-    footprint — measured in SCALE.md r15).  The oracle recomputes
-    first+gaps from first principles (lag window over the ordered token
-    positions), so a green row certifies the ENCODING itself
-    cross-engine; the write -> read_index roundtrip and probe equality
-    are pinned in tests/test_persist.py."""
-    from pyspark.sql import functions as F
-
-    from ..operators.persist import delta_encode_positions
-
-    toks = tokenize_positions(load_table(spark, sf_dir, "documents"))
-    return build_postings(toks).select(
-        "term", "doc_id", "tf",
-        F.array_join(delta_encode_positions("positions"), ",")
-        .alias("positions_delta"))
-
-
 def q_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: document frequency per term."""
     toks = tokenize_positions(load_table(spark, sf_dir, "documents"))
@@ -175,18 +154,15 @@ def q_bm25_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_probe_persisted(spark, ixdir, FLAGSHIP_QUERY, k=10)
 
 
-def q_phrase_append_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r16 self-describing delta store certified THROUGH a positional
-    consumer: build the gap-encoded index (positions stored as
-    ``positions_delta``) from 3/4 of the corpus, APPEND the remaining
-    quarter (``append_to_index`` detects the live layout and encodes the
-    batch to match — the silent-corruption case the r15 advice flagged),
-    read back through the layout-auto-detecting ``read_index``, and run
-    the phrase query.  BM25 probes can't certify any of this (scoring
-    never reads positions), so this row is the one that would flip if a
-    batch were appended in the wrong layout or gaps were served as
-    absolutes: the plain in-flight search_phrase_match oracle applies
-    verbatim because the final corpus is the full document set."""
+def q_phrase_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted-store append certified THROUGH a positional
+    consumer: build the index from 3/4 of the corpus, APPEND the
+    remaining quarter (``append_to_index``), read it back through
+    ``read_index``, and run the phrase query.  BM25 probes can't certify
+    the appended positions (scoring never reads them), so this row is the
+    one that would flip if a batch's positions were written wrong: the
+    in-flight search_phrase_match oracle applies verbatim because the
+    final corpus is the full document set."""
     import os
     import tempfile
 
@@ -201,11 +177,10 @@ def q_phrase_append_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     nid = F.col("doc_id").cast("bigint")
     scratch = os.path.join(tempfile.gettempdir(), "spark_graft_io")
-    ixdir = os.path.join(scratch, f"ix_appdelta_{os.getpid()}")
-    cleanup_stale_scratch(scratch, "ix_appdelta_*", keep=ixdir)
+    ixdir = os.path.join(scratch, f"ix_appphrase_{os.getpid()}")
+    cleanup_stale_scratch(scratch, "ix_appphrase_*", keep=ixdir)
     write_index(build_index(docs.filter((nid % 4) != 0),
-                        term_buckets=16), ixdir,
-                delta_positions=True)
+                        term_buckets=16), ixdir)
     append_to_index(docs.filter((nid % 4) == 0), ixdir)
     return phrase_match(read_index(spark, ixdir)["term_document"], PHRASE)
 
@@ -285,33 +260,6 @@ def q_bm25_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, ixdir,
         docs.filter((nid % IX_DELETE_MOD) == IX_DELETE_REM).select("doc_id"))
     compact_index(spark, ixdir)
-    return bm25_probe_persisted(spark, ixdir, FLAGSHIP_QUERY, k=10)
-
-
-def q_bm25_probe_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The GAP-ENCODED index on the serving path (r15, VERDICT r14 #7):
-    build the persisted index with ``delta_positions=True`` (positions
-    stored as first+gaps — the Lucene layout; 5.4x smaller postings on a
-    long-doc corpus, SCALE.md r15) and probe the flagship query.  BM25
-    scoring never reads positions (column-pruned scan), so the probe
-    must be IDENTICAL to the plain store's — the search_bm25_topk oracle
-    applies verbatim, certifying through the driver gate that the
-    storage optimization is invisible to the query path.  The encoding
-    itself is hash-certified by search_postings_delta; positional
-    consumers' decode equality is pinned in tests/test_persist.py."""
-    import os
-    import tempfile
-
-    from ..operators.index import build_index
-    from ..operators.persist import bm25_probe_persisted, write_index
-    from ..sources.io import cleanup_stale_scratch
-
-    docs = load_table(spark, sf_dir, "documents")
-    scratch = os.path.join(tempfile.gettempdir(), "spark_graft_io")
-    ixdir = os.path.join(scratch, f"ix_delta_{os.getpid()}")
-    cleanup_stale_scratch(scratch, "ix_delta_*", keep=ixdir)
-    write_index(build_index(docs, term_buckets=16), ixdir,
-                delta_positions=True)
     return bm25_probe_persisted(spark, ixdir, FLAGSHIP_QUERY, k=10)
 
 
@@ -661,13 +609,11 @@ QUERIES = {
     "search_phrase_match": q_phrase_match,
     "search_tokenize": q_tokenize,
     "search_postings": q_postings,
-    "search_postings_delta": q_postings_delta,
     "search_doc_freq": q_doc_freq,
     "search_doc_stats": q_doc_stats,
     "search_bm25_topk": q_bm25_topk,
     "search_bm25_append_probe": q_bm25_append_probe,
-    "search_bm25_probe_delta": q_bm25_probe_delta,
-    "search_phrase_append_delta": q_phrase_append_delta,
+    "search_phrase_append": q_phrase_append,
 }
 
 def _phrase_oracle(terms: list[str]) -> str:
@@ -759,18 +705,6 @@ WITH {_TOKENS_CTE}
 SELECT term, doc_id, CAST(count(*) AS INTEGER) AS tf,
        array_to_string(list(position ORDER BY position), ',') AS positions
 FROM tokens GROUP BY term, doc_id
-""",
-    "search_postings_delta": f"""
-WITH {_TOKENS_CTE},
-pos AS (
-  SELECT term, doc_id, position,
-         position - coalesce(lag(position) OVER (PARTITION BY term, doc_id
-                                                  ORDER BY position), 0)
-             AS gap
-  FROM tokens)
-SELECT term, doc_id, CAST(count(*) AS INTEGER) AS tf,
-       array_to_string(list(gap ORDER BY position), ',') AS positions_delta
-FROM pos GROUP BY term, doc_id
 """,
     "search_doc_freq": f"""
 WITH {_TOKENS_CTE}
@@ -1188,12 +1122,9 @@ ORACLES["search_bm25_batch_probe"] = _batch_sql(
 # the green row's information is that the partition append + df-log sum +
 # stats append reconstruct the exact index state.
 ORACLES["search_bm25_append_probe"] = ORACLES["search_bm25_topk"]
-# delta-layout write + layout-matching append + auto-decode read ==
-# the in-flight full-corpus index, so the plain phrase oracle applies.
-ORACLES["search_phrase_append_delta"] = ORACLES["search_phrase_match"]
-# Gap-encoded store serves identically: positions never reach the BM25
-# probe plan, so the full-corpus replay applies verbatim.
-ORACLES["search_bm25_probe_delta"] = ORACLES["search_bm25_topk"]
+# write + append + read back == the in-flight full-corpus index, so the
+# plain phrase oracle applies.
+ORACLES["search_phrase_append"] = ORACLES["search_phrase_match"]
 
 
 # Offline ranker eval: nDCG@10 / AP@10 of plain BM25 vs BM25F-graded

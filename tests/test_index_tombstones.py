@@ -188,30 +188,21 @@ def test_hadoop_delete_fail_loud_and_noop(spark, tmp_path):
         lc.hadoop_fs = real
 
 
-def test_delete_compact_on_delta_store_preserves_positions(spark, docs,
-                                                           tmp_path):
-    """Lifecycle × layout matrix completed (r16): tombstone + compact on
-    a GAP-ENCODED store must preserve the self-describing layout on disk
-    (compaction rewrites rows, never re-encodes them) and decode to
-    exactly the survivors' absolute positions — equal to a fresh delta
-    build over the survivors."""
+def test_delete_compact_preserves_positions(spark, docs, tmp_path):
+    """Tombstone + compact rewrites postings rows without touching their
+    positions: the compacted store's (term, doc_id, positions) rows equal
+    a fresh build over the survivors."""
     from big_data_assignment_2_spark.operators.persist import read_index
 
     nid = F.col("doc_id").cast("bigint")
-    path, fresh = str(tmp_path / "dix"), str(tmp_path / "dfresh")
-    write_index(build_index(docs), path, delta_positions=True)
+    path, fresh = str(tmp_path / "ix"), str(tmp_path / "fresh")
+    write_index(build_index(docs), path)
     delete_from_index(spark, path,
                       docs.filter(nid % 3 == 1).select("doc_id"))
     before = _probe(spark, path)
     compact_index(spark, path)
     assert _probe(spark, path) == before
-    # the layout survived the rewrite
-    td_raw = spark.read.parquet(f"{path}/term_document")
-    assert "positions_delta" in td_raw.columns
-    assert "positions" not in td_raw.columns
-    # decoded positions equal a fresh survivors-only delta build
-    write_index(build_index(docs.filter(nid % 3 != 1)), fresh,
-                delta_positions=True)
+    write_index(build_index(docs.filter(nid % 3 != 1)), fresh)
     a = sorted(((r["term"], r["doc_id"], list(r["positions"]))
                 for r in read_index(spark, path)["term_document"].collect()))
     b = sorted(((r["term"], r["doc_id"], list(r["positions"]))

@@ -261,12 +261,12 @@ def test_probe_all_oov_query_returns_no_rows(spark, index_path):
                                       n_buckets=8).collect() == []
 
 
-@pytest.mark.parametrize("layout", ["delta_positions", "title"])
+@pytest.mark.parametrize("layout", ["title"])
 def test_probe_identical_across_store_layouts(spark, sf_dir, index_path,
                                               tmp_path, layout):
-    """One declared read schema serves every layout: a gap-encoded store
-    (``positions_delta``) and a store whose documents_info carries a
-    ``title`` column probe exactly like the plain store."""
+    """The declared read schemas ignore extra columns: a store whose
+    documents_info carries a ``title`` column probes exactly like the
+    plain store."""
     from big_data_assignment_2_spark.operators.persist import (
         bm25_probe_persisted)
     from big_data_assignment_2_spark.plans.search_queries import (
@@ -274,15 +274,11 @@ def test_probe_identical_across_store_layouts(spark, sf_dir, index_path,
 
     docs = load_table(spark, sf_dir, "documents")
     path = str(tmp_path / layout)
-    if layout == "title":
-        titled = docs.withColumn(
-            "title", F.concat(F.lit("doc "), F.col("doc_id").cast("string")))
-        write_index(build_index(titled, title_col="title"), path,
-                    term_buckets=8)
-        assert "title" in spark.read.parquet(f"{path}/documents_info").columns
-    else:
-        write_index(build_index(docs), path, term_buckets=8,
-                    delta_positions=True)
+    titled = docs.withColumn(
+        "title", F.concat(F.lit("doc "), F.col("doc_id").cast("string")))
+    write_index(build_index(titled, title_col="title"), path,
+                term_buckets=8)
+    assert "title" in spark.read.parquet(f"{path}/documents_info").columns
 
     def probe(p):
         return [tuple(r) for r in bm25_probe_persisted(
@@ -356,12 +352,10 @@ def test_append_to_index_equals_full_build(spark, sf_dir, tmp_path_factory):
     assert summed == fresh
 
 
-def test_append_to_delta_store_encodes_batch_to_match(spark, sf_dir,
-                                                      tmp_path_factory):
-    """Appending into a gap-encoded store (r16 advice): the batch must
-    adopt the live store's positions_delta layout — a plain-positions
-    append would silently corrupt positional consumers.  The grown
-    store's decoded logical view must equal a fresh full delta build's."""
+def test_append_preserves_positions(spark, sf_dir, tmp_path_factory):
+    """Appending a batch writes the same positions a full build does: the
+    grown store's (term, doc_id, positions) rows equal a fresh full
+    build's, so positional consumers over an appended store are exact."""
     from pyspark.sql import functions as F
 
     from big_data_assignment_2_spark.operators.index import build_index
@@ -370,96 +364,16 @@ def test_append_to_delta_store_encodes_batch_to_match(spark, sf_dir,
 
     docs = load_table(spark, sf_dir, "documents")
     nid = F.col("doc_id").cast("bigint")
-    inc = str(tmp_path_factory.mktemp("ixd_inc"))
-    full = str(tmp_path_factory.mktemp("ixd_full"))
-    write_index(build_index(docs.filter((nid % 2) == 0)), inc,
-                delta_positions=True)
+    inc = str(tmp_path_factory.mktemp("ixp_inc"))
+    full = str(tmp_path_factory.mktemp("ixp_full"))
+    write_index(build_index(docs.filter((nid % 2) == 0)), inc)
     append_to_index(docs.filter((nid % 2) == 1), inc)
-    write_index(build_index(docs), full, delta_positions=True)
-    # on disk: one uniform layout, no mixed columns
-    raw = spark.read.parquet(f"{inc}/term_document")
-    assert "positions_delta" in raw.columns and \
-        "positions" not in raw.columns
+    write_index(build_index(docs), full)
     a = sorted(((r["term"], r["doc_id"], list(r["positions"]))
                 for r in read_index(spark, inc)["term_document"].collect()))
     b = sorted(((r["term"], r["doc_id"], list(r["positions"]))
                 for r in read_index(spark, full)["term_document"].collect()))
     assert a == b and a
-
-
-def test_delta_positions_roundtrip_probe_equality_and_size(
-        spark, sf_dir, index_path, tmp_path_factory):
-    """Gap-encoded postings (r15): write_index(delta_positions=True) must
-    (a) round-trip to the identical logical positions via
-    read_index(delta_positions=True), (b) serve positional consumers
-    (phrase_match) and the BM25 probe identically to the plain store,
-    and (c) shrink the on-disk postings footprint (smaller stored ints →
-    fewer parquet bit-packing bits)."""
-    from big_data_assignment_2_spark.operators.persist import (
-        bm25_probe_persisted)
-    from big_data_assignment_2_spark.operators.search import phrase_match
-    from big_data_assignment_2_spark.plans.search_queries import (
-        FLAGSHIP_QUERY)
-
-    delta_path = str(tmp_path_factory.mktemp("index_delta"))
-    ix = build_index(load_table(spark, sf_dir, "documents"))
-    write_index(ix, delta_path, term_buckets=8, delta_positions=True)
-
-    plain = read_index(spark, index_path)["term_document"]
-    decoded = read_index(spark, delta_path,
-                         delta_positions=True)["term_document"]
-    a = sorted(((r["term"], r["doc_id"], r["tf"], list(r["positions"]))
-                for r in plain.collect()))
-    b = sorted(((r["term"], r["doc_id"], r["tf"], list(r["positions"]))
-                for r in decoded.collect()))
-    assert a == b and a
-
-    # the stored form really is gaps, under the self-describing column
-    # name (r16 advice: a delta store must be distinguishable on disk)
-    raw = spark.read.parquet(delta_path + "/term_document")
-    assert "positions_delta" in raw.columns
-    assert "positions" not in raw.columns
-    multi = raw.filter(F.size("positions_delta") >= 2).limit(5).collect()
-    for r in multi:
-        dec = [r["positions_delta"][0]]
-        for g in r["positions_delta"][1:]:
-            assert g >= 0
-            dec.append(dec[-1] + g)
-        assert dec == sorted(dec)
-
-    # flag-free read of a delta store auto-decodes (self-describing):
-    # identical logical view, no flag required
-    auto = read_index(spark, delta_path)["term_document"]
-    c = sorted(((r["term"], r["doc_id"], r["tf"], list(r["positions"]))
-                for r in auto.collect()))
-    assert c == a
-
-    # asserting delta on a PLAIN store fails fast instead of
-    # double-decoding
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="refusing to guess"):
-        read_index(spark, index_path, delta_positions=True)
-
-    # positional consumer equality
-    pm_plain = sorted(map(tuple, phrase_match(
-        plain, ["vector", "query"]).collect()))
-    pm_delta = sorted(map(tuple, phrase_match(
-        decoded, ["vector", "query"]).collect()))
-    assert pm_plain == pm_delta
-
-    # scoring path equality (positions are column-pruned, no flag needed)
-    probe_plain = sorted(map(tuple, bm25_probe_persisted(
-        spark, index_path, FLAGSHIP_QUERY, k=10, n_buckets=8).collect()))
-    probe_delta = sorted(map(tuple, bm25_probe_persisted(
-        spark, delta_path, FLAGSHIP_QUERY, k=10, n_buckets=8).collect()))
-    assert probe_plain == probe_delta and probe_plain
-
-    def du(p):
-        return sum(os.path.getsize(os.path.join(d, f))
-                   for d, _, fs in os.walk(os.path.join(p, "term_document"))
-                   for f in fs)
-    plain_b, delta_b = du(index_path), du(delta_path)
-    assert delta_b < plain_b, (delta_b, plain_b)
 
 
 def test_sq8_persisted_probe_equals_inflight_and_shrinks(spark, sf_dir,

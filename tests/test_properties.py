@@ -292,37 +292,6 @@ def test_prefix_filter_pigeonhole_is_lossless_property():
                         "containment pair escaped")
 
 
-def test_delta_positions_roundtrip_random(spark):
-    """Property: decode(encode(p)) == p for random sorted int arrays
-    (including empty, singleton, duplicates-free ascending runs and
-    large absolute offsets), and every encoded gap is non-negative —
-    the invariants the gap-encoded postings layout rests on.  One
-    generated batch, one Spark job."""
-    from big_data_assignment_2_spark.operators.persist import (
-        delta_decode_positions, delta_encode_positions)
-
-    rng = random.Random(1509)
-    rows = [(0, []), (1, [0]), (2, [2 ** 30, 2 ** 30 + 1])]
-    for i in range(3, 120):
-        n = rng.randint(0, 40)
-        base = rng.randint(0, 1 << 20)
-        ps = sorted(rng.sample(range(base, base + 50_000),
-                               min(n, 50_000)))
-        rows.append((i, ps))
-    df = spark.createDataFrame(rows, "id long, positions array<int>")
-    out = df.select(
-        "id", "positions",
-        delta_encode_positions("positions").alias("enc"),
-        delta_decode_positions(
-            delta_encode_positions("positions")).alias("dec")).collect()
-    for r in out:
-        assert list(r["dec"]) == list(r["positions"]), r["id"]
-        enc = list(r["enc"])
-        assert all(g >= 0 for g in enc[1:]), r["id"]
-        if enc:
-            assert enc[0] == r["positions"][0]
-
-
 def test_cjk_query_terms_literal_matches_tokenizer(spark):
     """Pins the search_bm25_cjk query-term literal to the engine
     tokenizer: if tokenize_cjk semantics drift, this fails before the

@@ -1,10 +1,10 @@
-"""Dump .explain("formatted") for bench-row queries to plans/r18/<q>_<tag>.txt.
+"""Dump .explain("formatted") for bench-row queries to plans/<ROUND>/<q>_<tag>.txt.
 
-Usage: python tools/explain_r18.py <before|after> [query ...]
+Usage: python tools/explain.py ROUND <before|after> [query ...]
 
-Captures the optimization round's plan evidence: every query the round
-touches gets a _before and _after snapshot (judge checks plan claims
-against these files).
+Captures an optimization round's plan evidence: every query the round
+touches gets a _before and _after snapshot, so plan claims can be
+checked against these files.
 """
 
 from __future__ import annotations
@@ -35,17 +35,20 @@ DEFAULT_SET = [
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = sys.argv[2:] or DEFAULT_SET
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        print(__doc__, file=sys.stderr)
+        return 2
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or DEFAULT_SET
 
     from big_data_assignment_2_spark.plans import all_queries
     from big_data_assignment_2_spark.session import get_spark
 
-    spark = get_spark("explain-r18", master="local[8]",
+    spark = get_spark(f"explain-{rnd}", master="local[8]",
                       shuffle_partitions=32)
     qs = all_queries()
     outdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r18")
+        os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         try:

@@ -61,11 +61,6 @@ PLAN_SET = [
     # r14: match-set facets — ONE grouping-sets Expand + hash-agg for
     # all dimensions after the broadcast term probe.
     "search_facets",
-    # r15: gap-encoded postings — the delta transform is a map-side
-    # array projection feeding the same bucket-partitioned write; the
-    # probe plan must be IDENTICAL to the plain store's (positions
-    # column-pruned at the scan).
-    "search_bm25_probe_delta",
 ]
 
 
