@@ -5,12 +5,18 @@ Jaccard, embedding-cosine.
 Scale design (100 TB):
 - Exact dedup is a hash-groupBy on a content key — one shuffle on a
   well-distributed md5 key, min(doc_id) as the canonical survivor.
-- MinHash+LSH never compares all pairs: explode (doc → shingles) →
-  16 min-aggs (one shuffle) → band keys → docs sharing a band bucket are
-  the only candidates (second shuffle, bucket-sized joins) → exact Jaccard
-  verification on candidates only.  This is the standard
+- MinHash+LSH never compares all pairs: shingles → 16 minhash slots →
+  band keys → docs sharing a band bucket are the only candidates → exact
+  Jaccard verification on candidates only.  This is the standard
   shingle→minhash→band→bucket-join pipeline (Broder '97; used by C4/
-  RefinedWeb/Dolma-style dedup).
+  RefinedWeb/Dolma-style dedup).  :func:`minhash_near_dups` runs it as
+  one lazy plan with no persist and no driver collect: one exchange
+  groups docs by token set (the quadratic stages then run once per
+  distinct set), one exchange on (band_id, band_key) feeds a self-join
+  that emits each candidate once, in its lowest shared band, so no
+  ``distinct``; both exchanges are reused by every consumer.  The
+  sampled skew guard of :func:`lsh_candidate_pairs` stays off this path
+  (see :func:`_minhash_rep_structure`).
 - SimHash packs a document into one 60-bit signature (Charikar '02;
   60 not 64 because 1<<63 overflows signed 64-bit in both engines);
   near-dup candidates share one of four 15-bit sub-fingerprint bands
@@ -88,15 +94,20 @@ def minhash_signatures_from_arrays(arrays: DataFrame,
     return h.select("doc_id", *minhash_sig_array_cols("__h"))
 
 
-def lsh_band_keys(signatures: DataFrame) -> DataFrame:
-    """Explode each signature into NUM_BANDS (band_id, band_key) rows."""
-    bands = F.array(*[
+def _band_key_array() -> Column:
+    """The NUM_BANDS band keys of a ``sig0..sig15`` row, as one array:
+    md5 of each band's comma-joined slots."""
+    return F.array(*[
         F.md5(F.concat_ws(",", *[F.col(f"sig{b * BAND_SIZE + r}").cast("string")
                                  for r in range(BAND_SIZE)]))
         for b in range(NUM_BANDS)
     ])
+
+
+def lsh_band_keys(signatures: DataFrame) -> DataFrame:
+    """Explode each signature into NUM_BANDS (band_id, band_key) rows."""
     return signatures.select(
-        "doc_id", F.posexplode(bands).alias("band_id", "band_key"))
+        "doc_id", F.posexplode(_band_key_array()).alias("band_id", "band_key"))
 
 
 def lsh_candidate_pairs(band_keys: DataFrame,
@@ -174,66 +185,102 @@ def _minhash_rep_structure(docs: DataFrame, threshold: float,
                            text_col: str, id_col: str):
     """Shared core of the MinHash-LSH pipeline: exact-dup group structure
     plus verified near-dup pairs computed on one REPRESENTATIVE per
-    distinct token set.  Returns ``(members, groups, rep_pairs)`` where
-    ``members`` = (``__rep``, ``__nid``) hash-partitioned on ``__rep``
-    and persisted, ``groups`` = (``__gkey``, ``__rep`` = min member id,
-    ``__n``), and ``rep_pairs`` = verified (doc_a, doc_b, jaccard) over
-    representatives only.
+    distinct token set.  Returns ``(groups, rep_pairs)``: ``groups`` =
+    (``__rep``, ``__members``, ``__toks``), one row per distinct token
+    set with its sorted member ids and ``__rep`` = the min member;
+    ``rep_pairs`` = verified (``__ra`` < ``__rb``, ``__ma``, ``__mb``,
+    ``jaccard``) over representatives of non-empty token sets only.
+    Docs with no tokens share the empty set's group and never pair: the
+    LSH oracle gives them no signature.
 
-    Scale rationale (result-identical by construction):
-    - **Exact-dup collapse first**: docs with identical token sets have
-      identical signatures, bands, and Jaccards, so the expensive stages
-      (band self-join, intersection verify) run once per distinct token
-      set.  On self-similar corpora this cuts the quadratic stages by the
-      dup factor squared.
-    - **Tokenize once**: the per-doc sorted distinct token ARRAY is the
-      single materialized relation; the group key (md5 of the joined
-      array), the MinHash signatures (in-row ``array_min`` — no explode
-      shuffle), and the Jaccard verify arrays (no collect_list shuffle)
-      all derive from it map-side.  The pre-round-4 formulation tokenized
-      the corpus twice and paid two extra wide aggs.
-    - **Persisted reused stages**: token arrays / rep arrays / verified
-      pairs each feed multiple branches; without materialization Spark
-      re-executes the tokenize lineage per branch.  MEMORY_AND_DISK so
-      100×-scale inputs spill instead of OOMing (a production pipeline
-      would write signatures/candidates to a table between stages).
+    One lazy plan with two exchanges, each reused by every consumer
+    (no persist, no driver collect; result-identical to the exploded
+    public steps by construction):
+    - **Groups exchange** on the token-set key: the corpus is tokenized
+      once into sorted distinct token arrays and grouped by their md5
+      (== :func:`tokenset_key`).  Docs with identical token sets have
+      identical signatures, bands and Jaccards, so the band self-join
+      and the verify run once per distinct token set; member pairs
+      expand back map-side.  Every consumer (bands, both verify sides,
+      intra-group pairs, cluster labels) reads both aggregate columns,
+      so column pruning never splits the aggregate and Spark reuses its
+      exchange.
+    - **Band exchange**: narrow rows (rep, set size, 4 band keys)
+      ``posexplode_outer``-ed and repartitioned to the session's
+      ``spark.sql.shuffle.partitions`` on (band_id, band_key); both
+      sides of the shuffled-hash self-join alias columns ABOVE that
+      repartition, so they read one reused exchange.  The fixed count
+      keeps AQE from coalescing a hot bucket's join into a few tasks;
+      ``posexplode_outer`` keeps Spark from inferring a ``size(keys) >
+      0`` filter and inlining the 16 md5 hashes per token into it.
+    - **Lowest-shared-band emission**: a pair is kept only in the first
+      band whose keys it shares (``array_position(zip_with(ka, kb, =),
+      true) = band_id + 1``), so each candidate comes out exactly once
+      and no ``distinct`` is needed; the size filter runs in the same
+      join, before any token array is touched.
+    - **Verify only survivors**: (members, tokens) join onto the
+      candidate reps for ``array_intersect``; token arrays never ride
+      through the band join.
+
+    The skew guard of :func:`lsh_candidate_pairs` is not on this path:
+    after the collapse a hot band bucket is a clique of DISTINCT near-
+    duplicates whose output is quadratic anyway, the shuffled-hash build
+    per bucket holds narrow rows only, and that guard's sampled
+    ``collect`` (which re-ran the tokenize lineage before the real plan)
+    never fired below 4,096 rows per bucket.
     """
-    from pyspark import StorageLevel
+    from ..functions.hashing import minhash_sig_array_cols
 
-    num_id = F.col(id_col).cast("bigint")
-    # (__nid, __toks): sorted distinct tokens — sole tokenize of the corpus.
-    toksets = docs.select(
-        num_id.alias("__nid"),
-        F.sort_array(F.array_distinct(tokenize(text_col))).alias("__toks")) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    # md5(joined sorted tokens) == tokenset_key(text) by construction.
-    keyed = toksets.select(
-        "__nid", F.md5(F.array_join("__toks", " ")).alias("__gkey"))
-    groups = keyed.groupBy("__gkey").agg(
-        F.min("__nid").alias("__rep"), F.count("*").alias("__n"))
+    toks = F.sort_array(F.array_distinct(tokenize(text_col)))
+    groups = (docs.select(F.col(id_col).cast("bigint").alias("__nid"),
+                          toks.alias("__toks"))
+              .groupBy(F.md5(F.array_join("__toks", " ")).alias("__gkey"))
+              .agg(F.sort_array(F.collect_list("__nid")).alias("__members"),
+                   F.first("__toks").alias("__toks"))
+              .select(F.element_at("__members", 1).alias("__rep"),
+                      "__members", "__toks"))
+    sigs = (groups.filter(F.size("__toks") > 0)
+            .select("__rep", F.size("__toks").alias("__sz"),
+                    F.transform("__toks", minhash_term_hash).alias("__h"))
+            .select("__rep", "__sz", *minhash_sig_array_cols("__h")))
+    n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    bands = (sigs.select("__rep", "__sz", _band_key_array().alias("__keys"))
+             .select("__rep", "__sz", "__keys",
+                     F.posexplode_outer("__keys").alias("band_id", "band_key"))
+             .repartition(n_parts, "band_id", "band_key"))
 
-    # doc_id stays BIGINT through the candidate/verify stages: the 2.8M-row
-    # pair distinct and the verify joins hash/compare 8-byte longs instead
-    # of strings (~25% off the dominant stages); callers cast at the edge.
-    rep_arrays = toksets.join(
-        groups.select(F.col("__rep").alias("__join_id")),
-        F.col("__nid") == F.col("__join_id"), "left_semi") \
-        .select(F.col("__nid").alias("doc_id"), "__toks") \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    cand = lsh_candidate_pairs(lsh_band_keys(
-        minhash_signatures_from_arrays(rep_arrays)))
-    rep_pairs = jaccard_verify_arrays(cand, rep_arrays, threshold) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    # (__rep, __nid) partitioned on __rep and persisted: every consumer —
-    # the intra-group self-join, both cross-pair expansions, the
-    # cluster-label join — keys on __rep, so the warm path reads one
-    # co-partitioned in-memory relation instead of re-running the
-    # keyed⋈groups shuffle per branch (measured 2× on the warm bench).
-    members = keyed.join(groups.select("__gkey", "__rep"), "__gkey") \
-        .select("__rep", "__nid") \
-        .repartition("__rep") \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    return members, groups, rep_pairs
+    def side(s: str) -> DataFrame:
+        return bands.select("band_id", "band_key",
+                            F.col("__rep").alias(f"__r{s}"),
+                            F.col("__sz").alias(f"__s{s}"),
+                            F.col("__keys").alias(f"__k{s}"))
+
+    first_shared = F.array_position(
+        F.zip_with("__ka", "__kb", lambda x, y: x == y), True)
+    cand = (side("a").hint("shuffle_hash")
+            .join(side("b"), ["band_id", "band_key"])
+            .filter((F.col("__ra") < F.col("__rb"))
+                    & (F.least("__sa", "__sb")
+                       >= F.lit(threshold) * F.greatest("__sa", "__sb"))
+                    & (first_shared == F.col("band_id") + 1))
+            .select("__ra", "__rb"))
+
+    def arrays(s: str) -> DataFrame:
+        return groups.select(F.col("__rep").alias(f"__r{s}"),
+                             F.col("__members").alias(f"__m{s}"),
+                             F.col("__toks").alias(f"__t{s}"))
+
+    inter = (cand.join(arrays("a"), "__ra").join(arrays("b"), "__rb")
+             .select("__ra", "__rb", "__ma", "__mb",
+                     F.size("__ta").alias("__sa"), F.size("__tb").alias("__sb"),
+                     F.size(F.array_intersect("__ta", "__tb")).alias("__ni")))
+    rep_pairs = (inter
+                 .select("__ra", "__rb", "__ma", "__mb", F.round(
+                     F.col("__ni").cast("double")
+                     / (F.col("__sa") + F.col("__sb") - F.col("__ni")), 6)
+                     .alias("jaccard"))
+                 .filter(F.col("jaccard") >= threshold))
+    return groups, rep_pairs
 
 
 def minhash_near_dups(docs: DataFrame, threshold: float = 0.9,
@@ -244,27 +291,30 @@ def minhash_near_dups(docs: DataFrame, threshold: float = 0.9,
     Runs the quadratic stages on token-set representatives
     (:func:`_minhash_rep_structure`), then expands member pairs back:
     intra-group pairs get Jaccard 1.0, cross-group pairs inherit their
-    reps' Jaccard.
+    reps' Jaccard.  Docs with no tokens pair with nothing.
     """
-    members, groups, rep_pairs = _minhash_rep_structure(
-        docs, threshold, text_col, id_col)
+    groups, rep_pairs = _minhash_rep_structure(docs, threshold, text_col,
+                                               id_col)
 
     # Cross-group pairs: every member of rep_a's group × rep_b's group.
     cross = (rep_pairs
-             .join(members.select(F.col("__rep").alias("doc_a"),
-                                  F.col("__nid").alias("na")), "doc_a")
-             .join(members.select(F.col("__rep").alias("doc_b"),
-                                  F.col("__nid").alias("nb")), "doc_b")
-             .select(F.least("na", "nb").cast("string").alias("doc_a"),
-                     F.greatest("na", "nb").cast("string").alias("doc_b"),
+             .select("__mb", "jaccard", F.explode("__ma").alias("__na"))
+             .select("__na", "jaccard", F.explode("__mb").alias("__nb"))
+             .select(F.least("__na", "__nb").cast("string").alias("doc_a"),
+                     F.greatest("__na", "__nb").cast("string").alias("doc_b"),
                      "jaccard"))
-    # Intra-group pairs (identical token sets): Jaccard exactly 1.0.
-    m = members.alias("m1").join(members.alias("m2"), "__rep") \
-        .filter(F.col("m1.__nid") < F.col("m2.__nid")) \
-        .select(F.col("m1.__nid").cast("string").alias("doc_a"),
-                F.col("m2.__nid").cast("string").alias("doc_b"),
-                F.lit(1.0).alias("jaccard"))
-    return cross.unionByName(m)
+    # Intra-group pairs (identical token sets): Jaccard exactly 1.0,
+    # streamed in-row — each member pairs with the later (larger) ones.
+    intra = (groups.filter(F.size("__toks") > 0)
+             .select("__members",
+                     F.posexplode("__members").alias("__pos", "__na"))
+             .select("__na", F.explode(F.slice(
+                 "__members", F.col("__pos") + 2, F.size("__members")))
+                 .alias("__nb"))
+             .select(F.col("__na").cast("string").alias("doc_a"),
+                     F.col("__nb").cast("string").alias("doc_b"),
+                     F.lit(1.0).alias("jaccard")))
+    return cross.unionByName(intra)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.5,
@@ -342,14 +392,21 @@ def connected_components(edges: DataFrame, nodes: DataFrame,
     """
     from pyspark import StorageLevel
 
-    both = edges.select(F.col("a").alias("x"), F.col("b").alias("y")) \
-        .unionByName(edges.select(F.col("b").alias("x"), F.col("a").alias("y"))) \
-        .persist(StorageLevel.MEMORY_AND_DISK)  # re-joined every round
+    # Both directions from ONE pass over `edges` (a union of two
+    # projections would run the edge plan twice); persisted because the
+    # edge count, the union-find collect and every round re-read it.
+    both = edges.select(F.inline(F.array(
+        F.struct(F.col("a").alias("x"), F.col("b").alias("y")),
+        F.struct(F.col("b").alias("x"), F.col("a").alias("y"))))) \
+        .persist(StorageLevel.MEMORY_AND_DISK)
     n_edges = both.count() // 2
     if n_edges <= local_max_edges:
         labels = _local_union_find(both, edges.sparkSession)
     else:
         labels = _iterative_min_label(both, max_iter)
+    # labels no longer read `both`: the local path built them with
+    # createDataFrame, the iterative one localCheckpoints every round.
+    both.unpersist()
     singletons = (nodes.join(labels, nodes.id == labels.id, "left_anti")
                   .select(nodes.id, nodes.id.alias("component")))
     return labels.unionByName(singletons)
@@ -437,17 +494,23 @@ def near_dup_clusters(docs: DataFrame, threshold: float = 0.9,
     self-similar corpora this shrinks the iterated graph by the dup
     factor (edges by its square) and skips pair expansion entirely.
     """
-    members, groups, rep_pairs = _minhash_rep_structure(
-        docs, threshold, text_col, id_col)
-    edges = rep_pairs.select(F.col("doc_a").cast("bigint").alias("a"),
-                             F.col("doc_b").cast("bigint").alias("b"))
-    rep_nodes = groups.select(F.col("__rep").alias("id"))
+    groups, rep_pairs = _minhash_rep_structure(docs, threshold, text_col,
+                                               id_col)
+    edges = rep_pairs.select(F.col("__ra").alias("a"), F.col("__rb").alias("b"))
+    rep_nodes = groups.filter(F.size("__toks") > 0) \
+        .select(F.col("__rep").alias("id"))
     comp = connected_components(edges, rep_nodes)
+    # The empty token set's group is no node: each of its docs is a
+    # singleton cluster.
+    members = groups.select("__rep", F.size("__toks").alias("__sz"),
+                            F.explode("__members").alias("__nid"))
+    label = F.when(F.col("__sz") > 0, F.col("component")) \
+        .otherwise(F.col("__nid"))
     return (members
-            .join(comp, members["__rep"] == comp["id"])
+            .join(comp, members["__rep"] == comp["id"], "left")
             .select(F.col("__nid").cast("string").alias("doc_id"),
-                    F.col("component").cast("string").alias("cluster_rep"),
-                    (F.col("__nid") == F.col("component")).alias("is_survivor")))
+                    label.cast("string").alias("cluster_rep"),
+                    (F.col("__nid") == label).alias("is_survivor")))
 
 
 def exact_substring_spans(docs: DataFrame, length: int = 8,
@@ -1346,7 +1409,7 @@ def _store_tombstones(spark: SparkSession, base_path: str):
     if no delete has ever been issued."""
     from .lifecycle import read_tombstones
 
-    return read_tombstones(spark, base_path, "__nid")
+    return read_tombstones(spark, base_path, "__nid", "bigint")
 
 
 # Read-time masking under the store's column names (shared mechanics).

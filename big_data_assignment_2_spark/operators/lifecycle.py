@@ -69,14 +69,17 @@ def append_tombstones(spark: SparkSession, base_path: str, ids,
     tomb.write.mode("append").parquet(f"{base_path}/tombstones")
 
 
-def read_tombstones(spark: SparkSession, base_path: str, col: str):
+def read_tombstones(spark: SparkSession, base_path: str, col: str,
+                    id_type: str):
     """The store's tombstoned ids as a distinct 1-column DataFrame,
-    or None if no delete was ever issued (Hadoop-FS existence check)."""
+    or None if no delete was ever issued (Hadoop-FS existence check).
+    ``col``/``id_type`` are what :func:`append_tombstones` wrote; the
+    declared schema spares a footer-inference job per read."""
     path = f"{base_path}/tombstones"
     fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
-    return spark.read.parquet(path).select(col).distinct()
+    return spark.read.schema(f"{col} {id_type}").parquet(path).distinct()
 
 
 def mask_tombstones(df: DataFrame, tomb, id_col: str) -> DataFrame:

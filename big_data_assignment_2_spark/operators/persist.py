@@ -128,7 +128,7 @@ def delete_from_index(spark: SparkSession, base_path: str, doc_ids) -> None:
 def _index_tombstones(spark: SparkSession, base_path: str):
     """Tombstoned doc ids as a 1-column DataFrame, or None if no delete
     has ever been issued."""
-    return read_tombstones(spark, base_path, "__del_doc")
+    return read_tombstones(spark, base_path, "__del_doc", "string")
 
 
 def compact_index(spark: SparkSession, base_path: str) -> None:
@@ -522,7 +522,7 @@ def ivfpq_delete(spark: SparkSession, base_path: str, vec_ids) -> None:
 def _ivfpq_tombstones(spark: SparkSession, base_path: str):
     """Tombstoned vec_ids as a 1-column DataFrame, or None if no delete
     has ever been issued."""
-    return read_tombstones(spark, base_path, "__nid")
+    return read_tombstones(spark, base_path, "__nid", "bigint")
 
 
 def ivfpq_compact(spark: SparkSession, base_path: str) -> None:
@@ -611,7 +611,7 @@ def sq8_compact(spark: SparkSession, path: str) -> None:
     bit-identically to a fresh ``write_sq8`` over the surviving
     vectors — per-vector scales make the store row-independent, so
     dropping rows cannot perturb the survivors."""
-    tomb = read_tombstones(spark, path, "__nid")
+    tomb = read_tombstones(spark, path, "__nid", "bigint")
     if tomb is None:
         return
     atomic_rewrite(spark, path, "codes",
@@ -635,7 +635,8 @@ def sq8_probe_persisted(spark: SparkSession, path: str, queries: DataFrame,
     from .similarity import brute_force_topk
 
     store = mask_tombstones(spark.read.parquet(f"{path}/codes"),
-                            read_tombstones(spark, path, "__nid"), "vec_id")
+                            read_tombstones(spark, path, "__nid", "bigint"),
+                            "vec_id")
     dq = store.select(
         "vec_id",
         F.transform("codes", lambda c: c.cast("double") * F.col("scale"))

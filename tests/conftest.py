@@ -17,3 +17,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def job_count(spark):
+    """``job_count(group, action)``: the Spark jobs ``action`` launches,
+    counted under its own job group."""
+    def count(group: str, action) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

@@ -46,6 +46,67 @@ def test_minhash_finds_exact_and_near(docs):
     assert all("5" not in p for p in pairs)
 
 
+def test_tokenless_docs_never_pair(spark):
+    """Docs with no tokens have no MinHash signature in the LSH oracle,
+    so they pair with nothing (not with each other at Jaccard 1.0) and
+    each is its own cluster."""
+    from big_data_assignment_2_spark.operators.dedup import near_dup_clusters
+
+    docs = spark.createDataFrame(
+        CORPUS[:2] + [(11, "!!!"), (12, "..."), (15, "")],
+        "doc_id long, text string")
+    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"]
+             for r in minhash_near_dups(docs, threshold=0.5).collect()}
+    assert pairs == {("1", "2"): 1.0}
+    rows = {r["doc_id"]: (r["cluster_rep"], r["is_survivor"])
+            for r in near_dup_clusters(docs, threshold=0.5).collect()}
+    assert rows == {"1": ("1", True), "2": ("1", False),
+                    "11": ("11", True), "12": ("12", True),
+                    "15": ("15", True)}
+
+
+def test_minhash_near_dups_is_one_plan(spark, docs, job_count):
+    """One pass is one lazy plan: at most 6 Spark jobs (two shuffles, a
+    broadcast and the result; the persisted multi-branch design ran 25
+    on this fixture), and nothing is left in the cache manager by the
+    pairs or the clusters."""
+    from big_data_assignment_2_spark.operators.dedup import near_dup_clusters
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    minhash_near_dups(docs, threshold=0.5).collect()   # first-call effects
+    spark.catalog.clearCache()                         # count a cold pass
+    assert job_count("minhash_pass", lambda: minhash_near_dups(
+        docs, threshold=0.5).collect()) <= 6
+    assert cache.isEmpty()
+    near_dup_clusters(docs, threshold=0.5).collect()
+    assert cache.isEmpty()
+
+
+def test_minhash_near_dups_equals_public_steps_on_hot_bucket(spark):
+    """The collapsed one-plan pipeline returns exactly what the public
+    steps compose to, on a corpus whose near-duplicates all share band
+    buckets: 60 distinct 200-token sets, each the base set with one
+    token replaced, plus an exact and a reordered copy of the first."""
+    from big_data_assignment_2_spark.operators.dedup import (
+        doc_tokensets, jaccard_verify, lsh_band_keys, lsh_candidate_pairs,
+        minhash_signatures)
+
+    base = [f"w{i}" for i in range(200)]
+    texts = [" ".join(base[:i] + [f"x{i}"] + base[i + 1:])
+             for i in range(60)]
+    corpus = list(enumerate(texts, start=1)) + [
+        (61, texts[0]), (62, " ".join(reversed(texts[0].split()))),
+        (63, "unrelated words about a different topic")]
+    docs = spark.createDataFrame(corpus, "doc_id long, text string")
+    toks = doc_tokensets(docs)
+    for thr in (0.5, 0.9):
+        got = {tuple(r) for r in minhash_near_dups(docs, thr).collect()}
+        want = {tuple(r) for r in jaccard_verify(lsh_candidate_pairs(
+            lsh_band_keys(minhash_signatures(toks))), toks, thr).collect()}
+        assert got == want, f"threshold {thr}"
+        assert ("1", "61", 1.0) in got and len(got) > 1000
+
+
 def test_ngram_jaccard_order_sensitive(docs):
     pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"]
              for r in ngram_jaccard_pairs(docs, n=3, threshold=0.1).collect()}

@@ -167,18 +167,7 @@ def test_bm25_probe_persisted_matches_inflight(spark, sf_dir, index_path):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
-def _job_count(spark, group: str, action) -> int:
-    """Spark jobs ``action`` launches, counted under its own job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_persisted_probe_job_count(spark, index_path):
+def test_persisted_probe_job_count(spark, index_path, job_count):
     """A persisted probe is one stats collect plus one scoring plan.  On
     a store without tombstones a single query runs in at most 6 Spark
     jobs; the design it replaced (schema inference on each of three
@@ -199,10 +188,8 @@ def test_persisted_probe_job_count(spark, index_path):
                                           k=5, n_buckets=8)
 
     single().collect(), batch().collect()      # first-call effects
-    assert _job_count(spark, "probe_single",
-                      lambda: single().collect()) <= 6
-    assert _job_count(spark, "probe_batch",
-                      lambda: batch().collect()) < 14
+    assert job_count("probe_single", lambda: single().collect()) <= 6
+    assert job_count("probe_batch", lambda: batch().collect()) < 14
 
     plan = single()._jdf.queryExecution().executedPlan().toString()
     assert "term_bucket" in plan.split("PartitionFilters", 1)[1][:300]
@@ -229,6 +216,36 @@ def test_probe_after_delete_matches_inflight_over_survivors(spark, sf_dir,
     want = [tuple(r) for r in
             search_documents(spark, docs.filter(~dead), q).collect()]
     assert got == want and len(got) == 10
+
+
+def test_tombstoned_probe_job_count(spark, sf_dir, tmp_path,
+                                    job_count):
+    """A probe of a store with tombstones reads the log with its declared
+    schema: no footer-inference job, so a single query runs in at most 9
+    Spark jobs and this batch in at most 11 (10 and 12 when the log's
+    schema was inferred on every read)."""
+    from big_data_assignment_2_spark.operators.persist import (
+        bm25_probe_persisted, bm25_probe_persisted_batch, delete_from_index)
+    from big_data_assignment_2_spark.plans.search_queries import (
+        BATCH_QUERIES)
+
+    docs = load_table(spark, sf_dir, "documents")
+    path = str(tmp_path / "ix")
+    write_index(build_index(docs), path, term_buckets=8)
+    delete_from_index(spark, path, docs.filter(
+        (F.col("doc_id").cast("bigint") % 5) == 1).select("doc_id"))
+    q = "vector query stream fast join"
+
+    def single():
+        return bm25_probe_persisted(spark, path, q, n_buckets=8).collect()
+
+    def batch():
+        return bm25_probe_persisted_batch(spark, path, BATCH_QUERIES, k=5,
+                                          n_buckets=8).collect()
+
+    single(), batch()                          # first-call effects
+    assert job_count("tomb_single", single) <= 9
+    assert job_count("tomb_batch", batch) <= 11
 
 
 def test_probe_repeated_term_matches_inflight(spark, sf_dir, index_path):
