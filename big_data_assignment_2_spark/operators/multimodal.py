@@ -99,7 +99,14 @@ def _spread_for_python(df: DataFrame) -> DataFrame:
     core.  Scale-adaptive, not a constant: on a real corpus the scan
     already has >= cores partitions and this is a no-op.  Row-to-task
     assignment is the only thing that changes — every per-payload result
-    is a pure function of the row, so results are multiset-identical."""
+    is a pure function of the row, so results are multiset-identical.
+
+    Each extra task costs about 0.3 CPU-s of Python worker set-up
+    (measured on Spark 4.1.2 / Python 3.11, SCALE.md "Python crossing
+    fixed cost"), so the spread pays only where the per-payload work is
+    heavier than that — the codec chains here.  Cheap vectorised passes
+    size their task count from the row count instead (see
+    ``similarity._python_tasks``)."""
     n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)

@@ -23,9 +23,8 @@ PLAN_SET = [
     "dedup_minhash_near",
     "dedup_simhash_near",
     "sim_cosine_top_pairs",
-    # sim_cosine_banded omitted: its plan tree matches sim_cosine_top_pairs
-    # (explode -> bucket equi-join -> distinct) but the plan-time literal
-    # weight arrays make the detail section unreadably large.
+    # sim_cosine_banded omitted: its plan is two mapInPandas passes around
+    # one (band, bucket) exchange (plans/r05 has the scaled rows).
     "sim_ann_lsh",
     "sim_tfidf_topk",
     "pipeline_pack_sequences",
