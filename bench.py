@@ -51,12 +51,6 @@ HEADLINE = [
 # Timed like HEADLINE but excluded from the suite total so `value` stays
 # comparable with BASELINE.md round over round (these queries postdate it).
 EXTRA = [
-    # CHANGELOG (round 10, per VERDICT r9 #6): the FIXED-width LSH rows
-    # (sim_cosine_top_pairs, sim_cosine_banded) are RETIRED from the bench
-    # (~7 s/round) — their scale verdict is settled (fixed bucket space
-    # admits a fixed fraction of all N² pairs; the width-ADAPTIVE twins
-    # below are the certified 100 TB path).  Both stay registered as
-    # sf0.01/sf0.1 gate artifacts for correctness continuity.
     "sim_cosine_top_pairs_scaled",  # width sized from corpus (100 TB form)
     "sim_cosine_near_dups_banded",  # certified default near-dup (adaptive)
     "sim_tfidf_topk",        # sparse TF-IDF cosine via inverted-index join
@@ -115,13 +109,6 @@ EXTRA = [
 # OS page cache / JIT warmth is inherent to an in-process bench.
 COLD_ALSO = ["dedup_minhash_near", "dedup_clusters"]
 
-
-# Fixed-width LSH rows dropped from sweeps at sf >= ~1: their fixed bucket
-# space admits a fixed FRACTION of all N² pairs (measured 84-87 s each at
-# sf1, 30x candidate blowup per 10x data — the cliff SCALE.md documents).
-# Since round 10 they are out of EXTRA entirely (settled verdict); the set
-# stays as a guard should either row ever be re-added.
-FIXED_WIDTH_LSH = {"sim_cosine_top_pairs", "sim_cosine_banded"}
 
 # Sub-2 s rows get extra repeats (5 total instead of 3): two rounds running
 # the driver's official number drifted ~+12% on PLANS THAT DID NOT CHANGE
@@ -204,20 +191,6 @@ def main() -> None:
     # separate self-load from co-tenants — the start sample can.
     load_start = round(os.getloadavg()[0], 2)
 
-    sf_name = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        big_sf = float(sf_name) >= 0.5
-    except ValueError:
-        big_sf = True  # synthetic dirs (e.g. sf1x) are the scale sweeps
-    extra = [q for q in EXTRA if not (big_sf and q in FIXED_WIDTH_LSH)]
-    if big_sf:
-        skipped = sorted(FIXED_WIDTH_LSH & set(EXTRA))
-        if skipped:
-            print(f"# sf {sf_name!r} >= 0.5: skipping fixed-width LSH rows "
-                  f"{skipped} (fixed bucket space admits a fixed fraction "
-                  "of all N^2 pairs; adaptive twins stay timed)",
-                  file=sys.stderr)
-
     # Warm up JVM / codegen / parquet footer caches.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     for name in ("region", "nation", "lineitem", "orders", "events",
@@ -290,7 +263,7 @@ def main() -> None:
     # order now matches the conditions BASELINE.md was recorded under.
     _flagship = "search_bm25_topk"
     run_order = ([q for q in HEADLINE if q != _flagship] + [_flagship]
-                 + extra)
+                 + EXTRA)
     for name in run_order:
         fn = qs[name]
         materialize(fn(spark, sf_dir))   # untimed warmup: codegen + JIT

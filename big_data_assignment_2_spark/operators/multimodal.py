@@ -113,6 +113,24 @@ def _spread_for_python(df: DataFrame) -> DataFrame:
     return df
 
 
+def _map_in_batches(df: DataFrame, fn, schema,
+                    batch_size: int) -> DataFrame:
+    """``df.mapInPandas(fn, schema)`` with ``fn`` fed pandas frames of at
+    most ``batch_size`` rows: each incoming Arrow batch is sliced inside
+    the Python worker, so a codec chain holds at most ``batch_size``
+    decoded payloads at a time.  Input batches themselves follow the
+    session's ``spark.sql.execution.arrow.maxRecordsPerBatch``, like
+    every other Python stage; the session conf is never written, so no
+    later Arrow stage in the session is resized by this one."""
+
+    def sliced(batches):
+        return fn(pdf.iloc[i:i + batch_size].reset_index(drop=True)
+                  for pdf in batches
+                  for i in range(0, len(pdf), batch_size))
+
+    return df.mapInPandas(sliced, schema)
+
+
 def decode_media(media: DataFrame, batch_size: int = 256,
                  fake: bool = True) -> DataFrame:
     """Arrow-batched decode via ``mapInPandas`` — the canonical shape for a
@@ -132,9 +150,7 @@ def decode_media(media: DataFrame, batch_size: int = 256,
                 "n_frames": [d[2] for d in dims],
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    media.sparkSession.conf.set(conf_key, str(batch_size))
-    return media.mapInPandas(decode_batches, DECODED_SCHEMA)
+    return _map_in_batches(media, decode_batches, DECODED_SCHEMA, batch_size)
 
 
 # --- real codecs (round 4) -------------------------------------------------
@@ -257,11 +273,9 @@ def generate_media_real(docs: DataFrame, batch_size: int = 256) -> DataFrame:
                         synth_waveform(did, n).tobytes()))
             yield pd.DataFrame(rows)
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(batch_size))
-    return _spread_for_python(
-        docs.select("doc_id", "text", "n_chars")).mapInPandas(
-        gen, MEDIA_SCHEMA)
+    return _map_in_batches(
+        _spread_for_python(docs.select("doc_id", "text", "n_chars")),
+        gen, MEDIA_SCHEMA, batch_size)
 
 
 REAL_DECODED_SCHEMA = StructType([
@@ -292,9 +306,8 @@ def decode_media_real(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 out[k] = pd.array([m[k] for m in metas], dtype="Int32")
             yield pd.DataFrame(out)
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    media.sparkSession.conf.set(conf_key, str(batch_size))
-    return media.mapInPandas(decode_batches, REAL_DECODED_SCHEMA)
+    return _map_in_batches(media,
+                           decode_batches, REAL_DECODED_SCHEMA, batch_size)
 
 
 def resize_bmp(payload: bytes, target: int = 224) -> bytes:
@@ -351,10 +364,8 @@ def resize_media_exec(media: DataFrame, target: int = 224,
                 "n_samples": pd.array([None] * len(outs), dtype="Int32"),
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    media.sparkSession.conf.set(conf_key, str(batch_size))
-    return (media.filter(F.col("media_type") == "image")
-            .mapInPandas(run, REAL_DECODED_SCHEMA)
+    return (_map_in_batches(media.filter(F.col("media_type") == "image"),
+                            run, REAL_DECODED_SCHEMA, batch_size)
             .select("media_id", F.col("width").alias("out_width"),
                     F.col("height").alias("out_height")))
 
@@ -410,10 +421,8 @@ def audio_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
                     if len(s) else 0.0)
             yield pd.DataFrame(out)
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    media.sparkSession.conf.set(conf_key, str(batch_size))
-    return (media.filter(F.col("media_type") == "audio")
-            .mapInPandas(feat, AUDIO_FEATURES_SCHEMA))
+    return _map_in_batches(media.filter(F.col("media_type") == "audio"),
+                           feat, AUDIO_FEATURES_SCHEMA, batch_size)
 
 
 def repartition_by_bytes(media: DataFrame, target_partition_bytes: int = 128 << 20,
@@ -497,9 +506,7 @@ def fake_embed(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 out[f"f{i}"] = [round(d[i] / 255.0, 6) for d in digs]
             yield pd.DataFrame(out)
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    media.sparkSession.conf.set(conf_key, str(batch_size))
-    return media.mapInPandas(embed_batches, EMBED_SCHEMA)
+    return _map_in_batches(media, embed_batches, EMBED_SCHEMA, batch_size)
 
 
 # --- real PNG codec (round 7) ----------------------------------------------
@@ -676,10 +683,8 @@ def generate_media_png(docs: DataFrame, batch_size: int = 256) -> DataFrame:
                                       7 + i % 3, i % 256) for i in ids],
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(batch_size))
-    return _spread_for_python(docs.select("doc_id")).mapInPandas(
-        gen, MEDIA_SCHEMA)
+    return _map_in_batches(_spread_for_python(docs.select("doc_id")),
+                           gen, MEDIA_SCHEMA, batch_size)
 
 
 def decode_media_png(media: DataFrame, batch_size: int = 256) -> DataFrame:
@@ -702,9 +707,8 @@ def decode_media_png(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 "pix_sum": [int(m["pixels"].sum()) for m in metas],
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    media.sparkSession.conf.set(conf_key, str(batch_size))
-    return media.mapInPandas(decode_batches, PNG_DECODED_SCHEMA)
+    return _map_in_batches(media,
+                           decode_batches, PNG_DECODED_SCHEMA, batch_size)
 
 
 # --- MP4 (ISO BMFF) metadata codec — fourth REAL codec ---------------------
@@ -2159,10 +2163,8 @@ def generate_media_jpeg(docs: DataFrame, batch_size: int = 256) -> DataFrame:
                 "payload": [jpeg_bytes(jpeg_flat_blocks(i)) for i in ids],
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(batch_size))
-    return _spread_for_python(docs.select("doc_id")).mapInPandas(
-        gen, MEDIA_SCHEMA)
+    return _map_in_batches(_spread_for_python(docs.select("doc_id")),
+                           gen, MEDIA_SCHEMA, batch_size)
 
 
 def generate_media_jpeg_dri(docs: DataFrame,
@@ -2188,10 +2190,8 @@ def generate_media_jpeg_dri(docs: DataFrame,
                             for i in ids],
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(batch_size))
-    return _spread_for_python(docs.select("doc_id")).mapInPandas(
-        gen, MEDIA_SCHEMA)
+    return _map_in_batches(_spread_for_python(docs.select("doc_id")),
+                           gen, MEDIA_SCHEMA, batch_size)
 
 
 def generate_media_jpeg_progressive(docs: DataFrame,
@@ -2216,10 +2216,8 @@ def generate_media_jpeg_progressive(docs: DataFrame,
                             for i in ids],
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(batch_size))
-    return _spread_for_python(docs.select("doc_id")).mapInPandas(
-        gen, MEDIA_SCHEMA)
+    return _map_in_batches(_spread_for_python(docs.select("doc_id")),
+                           gen, MEDIA_SCHEMA, batch_size)
 
 
 def decode_media_jpeg(media: DataFrame, batch_size: int = 256) -> DataFrame:
@@ -2241,9 +2239,8 @@ def decode_media_jpeg(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 "pix_sum": [int(m["pixels"].sum()) for m in metas],
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    media.sparkSession.conf.set(conf_key, str(batch_size))
-    return media.mapInPandas(decode_batches, JPEG_DECODED_SCHEMA)
+    return _map_in_batches(media,
+                           decode_batches, JPEG_DECODED_SCHEMA, batch_size)
 
 
 # --- MP4 MJPEG frame demux (r9) --------------------------------------------
@@ -2490,10 +2487,8 @@ def generate_media_mp4_mjpeg(docs: DataFrame,
                 "payload": payloads,
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(batch_size))
-    return _spread_for_python(docs.select("doc_id")).mapInPandas(
-        gen, MEDIA_SCHEMA)
+    return _map_in_batches(_spread_for_python(docs.select("doc_id")),
+                           gen, MEDIA_SCHEMA, batch_size)
 
 
 def demux_media_mp4(media: DataFrame, batch_size: int = 64) -> DataFrame:
@@ -2523,9 +2518,7 @@ def demux_media_mp4(media: DataFrame, batch_size: int = 64) -> DataFrame:
                 "pix_sum": out["pix_sum"],
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    media.sparkSession.conf.set(conf_key, str(batch_size))
-    return media.mapInPandas(demux_batches, MP4_FRAMES_SCHEMA)
+    return _map_in_batches(media, demux_batches, MP4_FRAMES_SCHEMA, batch_size)
 
 
 # --- Color JPEG (4:4:4) Spark plumbing (r9) --------------------------------
@@ -2563,10 +2556,8 @@ def generate_media_jpeg_color(docs: DataFrame,
                 "payload": payloads,
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(batch_size))
-    return _spread_for_python(docs.select("doc_id")).mapInPandas(
-        gen, MEDIA_SCHEMA)
+    return _map_in_batches(_spread_for_python(docs.select("doc_id")),
+                           gen, MEDIA_SCHEMA, batch_size)
 
 
 def decode_media_jpeg_color(media: DataFrame,
@@ -2588,9 +2579,8 @@ def decode_media_jpeg_color(media: DataFrame,
                 "pix_sum": [int(m["pixels"].sum()) for m in metas],
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    media.sparkSession.conf.set(conf_key, str(batch_size))
-    return media.mapInPandas(decode_batches, JPEG_COLOR_SCHEMA)
+    return _map_in_batches(media,
+                           decode_batches, JPEG_COLOR_SCHEMA, batch_size)
 
 
 # --- 4:2:0 subsampled JPEG Spark plumbing (r9) -----------------------------
@@ -2649,10 +2639,8 @@ def generate_media_jpeg_422(docs: DataFrame,
                 "payload": payloads,
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(batch_size))
-    return _spread_for_python(docs.select("doc_id")).mapInPandas(
-        gen, MEDIA_SCHEMA)
+    return _map_in_batches(_spread_for_python(docs.select("doc_id")),
+                           gen, MEDIA_SCHEMA, batch_size)
 
 
 def generate_media_jpeg_420(docs: DataFrame,
@@ -2676,7 +2664,5 @@ def generate_media_jpeg_420(docs: DataFrame,
                 "payload": payloads,
             })
 
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    docs.sparkSession.conf.set(conf_key, str(batch_size))
-    return _spread_for_python(docs.select("doc_id")).mapInPandas(
-        gen, MEDIA_SCHEMA)
+    return _map_in_batches(_spread_for_python(docs.select("doc_id")),
+                           gen, MEDIA_SCHEMA, batch_size)

@@ -16,8 +16,12 @@ Scale design (100 TB / billions of vectors):
   RNG) so the DuckDB oracle reproduces buckets exactly; a production system
   would persist trained planes/centroids instead (IVF), but the plumbing —
   bucket column, co-partitioned join, per-bucket scoring — is identical.
-- All vector math is JVM-side higher-order functions (zip_with/aggregate)
-  on double arrays — no UDF, no Python.
+- Per-row and per-query vector math is JVM-side higher-order functions
+  (zip_with/aggregate) on double arrays.  The pair stages are the
+  exception: banded-LSH near-dup (:func:`banded_lsh_candidate_pairs`) is
+  two ``mapInPandas`` passes, and the SemDeDup and MMR stages are grouped
+  ``applyInPandas`` passes, so each member's vector crosses into Python
+  once per group instead of the JVM folding one dot per candidate pair.
 """
 
 from __future__ import annotations
@@ -351,20 +355,6 @@ def _assign_nearest(v: DataFrame, centroids, vec_col: str = "v",
 # thousand rows, the standard FAISS train-on-sample contract.
 
 
-def probe_masks(probe_hamming: int) -> list[int]:
-    """XOR masks enumerating all buckets within ``probe_hamming`` bit flips:
-    identity + single-bit (+ two-bit) flips.  The mask set is symmetric
-    (m = ba^bb ⟺ bb = ba^m), so exploding probes on ONE side of a
-    self-join finds every qualifying pair exactly once."""
-    masks = [0]
-    if probe_hamming >= 1:
-        masks += [1 << i for i in range(NUM_PLANES)]
-    if probe_hamming >= 2:
-        masks += [(1 << i) | (1 << j)
-                  for i in range(NUM_PLANES) for j in range(i + 1, NUM_PLANES)]
-    return masks
-
-
 def band_width_for(n_vectors: int, bands: int = 4,
                    candidates_per_vector: int = 100) -> int:
     """Band width (planes per band) that holds E[random candidates] to
@@ -387,76 +377,6 @@ def band_width_for(n_vectors: int, bands: int = 4,
     return max(2, (m - 1).bit_length())
 
 
-def lsh_candidate_pairs(vectors: DataFrame, probe_hamming: int = 2,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> DataFrame:
-    """Scored candidate vector pairs via LSH bucket co-membership — the
-    scale-safe pair source for embedding near-dup (NO all-pairs stage).
-
-    One side explodes its bucket into all buckets within ``probe_hamming``
-    bit flips; an EQUI-join on the probed bucket then yields exactly the
-    pairs whose sign-LSH buckets differ by ≤ probe_hamming bits, each pair
-    once (the masks are distinct, so exactly one probe of the lesser id
-    matches the greater id's bucket).  Cost is O(N·|masks|) join input
-    against bucket-sized lists instead of O(N²); recall follows the
-    Charikar collision bound (1 - θ/π per plane), tunable via
-    probe_hamming and NUM_PLANES.
-
-    Returns (vec_a, vec_b, cos_sim) with vec_a < vec_b, cosine rounded 6dp.
-
-    Per-pair cost is ONE dot product: vectors are L2-normalized (and
-    bucketed) once per row in a persisted relation — without the persist,
-    Catalyst's projection collapsing would fold the normalization into the
-    per-pair expression and recompute it O(candidates) times.
-
-    Dot-product strategy — two measured alternatives, both REJECTED
-    (final decision, round-6; numbers at sf0.1, local[32]):
-
-    * numpy-dot ``pandas_udf``: 1.4× faster locally (2.2 s vs 3.2 s)
-      but ships both 64-dim vectors of every candidate pair through
-      Arrow (~400 MB at sf0.1, linear in candidate count).  At cluster
-      scale the per-pair path is exactly where serialization volume and
-      Python-worker contention dominate, so the local win inverts;
-      keeping the data JVM-side is the 100 TB-correct call.
-    * unrolled 128-term codegen expression (left-associated, so
-      bit-identical to the fold): 2.2× SLOWER (9.2 s vs 4.1 s) — a flat
-      expression that large falls out of effective whole-stage codegen
-      just like the 60-fold SimHash variant did (TODO.md round-4 note).
-
-    The interpreted ``aggregate`` fold is the keeper: one pass, no
-    Arrow hop, and the persisted-normalization layout already removed
-    the redundant work that used to dominate.
-    """
-    from pyspark import StorageLevel
-
-    v = (vectors.select(F.col(id_col).alias("id"),
-                        as_double(vec_col).alias("v"))
-         .withColumn("bucket", lsh_bucket(F.col("v")))
-         .withColumn("nrm", l2_norm(F.col("v")))
-         .withColumn("vn", F.transform("v", lambda x: x / F.col("nrm")))
-         .select("id", "vn", "bucket")
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    probes = v.select(
-        "id", "vn",
-        F.explode(F.array(*[F.col("bucket").bitwiseXOR(F.lit(m))
-                            for m in probe_masks(probe_hamming)])).alias("bucket"))
-    a, b = probes.alias("a"), v.alias("b")
-    return (a.join(b, "bucket")
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("vec_a"), F.col("b.id").alias("vec_b"),
-                    F.round(dot(F.col("a.vn"), F.col("b.vn")), 6).alias("cos_sim")))
-
-
-def cosine_near_dups(vectors: DataFrame, threshold: float,
-                     probe_hamming: int = 2, vec_col: str = "embedding",
-                     id_col: str = "vec_id") -> DataFrame:
-    """Thresholded embedding near-dup pairs over LSH candidates (approximate
-    by design — the candidate set, hence recall, is deterministic and
-    engine-portable; verification cosine is exact)."""
-    return (lsh_candidate_pairs(vectors, probe_hamming, vec_col, id_col)
-            .filter(F.col("cos_sim") >= threshold))
-
-
 def banded_lsh_candidate_pairs(vectors: DataFrame, rows_per_band: int = 4,
                                bands: int = 3, vec_col: str = "embedding",
                                id_col: str = "vec_id") -> DataFrame:
@@ -466,15 +386,13 @@ def banded_lsh_candidate_pairs(vectors: DataFrame, rows_per_band: int = 4,
     ``bands`` independent hash tables, each bucketing on ``rows_per_band``
     (r) distinct deterministic hyperplanes; a pair is a candidate if it
     collides in ANY band (key = (band, bucket) — no cross-band
-    conflation).  Why this beats the fixed-width multi-probe variant
-    (:func:`lsh_candidate_pairs`) as the corpus grows:
+    conflation).  Why it holds up as the corpus grows:
 
     * Random-collision rate is ``bands * 2^-r`` — r is THE scale knob.
-      A fixed-width scheme admits a FIXED fraction of all N^2 random
-      pairs (8 planes + 2-bit probes = 37/256 ~ 14.5% of all pairs —
-      measured as a 30x blowup going sf0.1 -> sf1), so candidate count
-      goes quadratic no matter how the data decorrelates.  Growing r by
-      ~2*log2(scale-up) holds E[random candidates] ~ linear in N:
+      Any bucket space of fixed width admits a FIXED fraction of all N^2
+      random pairs, so candidate count goes quadratic no matter how the
+      data decorrelates.  Growing r by ~2*log2(scale-up) holds
+      E[random candidates] ~ linear in N (:func:`band_width_for`):
       r = 14, b = 4 at 10x the corpus admits 4/2^14 ~ 0.02% of pairs.
     * Recall for a true near-dup with per-plane agreement p = 1 - theta/pi
       (Charikar) is ``1 - (1 - p^r)^b`` — banding (OR across tables)
@@ -732,8 +650,10 @@ def cosine_near_dups_banded(vectors: DataFrame, threshold: float,
                             vec_col: str = "embedding",
                             id_col: str = "vec_id") -> DataFrame:
     """Thresholded embedding near-dup pairs over banded-LSH candidates
-    (approximate by design; candidate set deterministic, verification
-    cosine exact — the banded sibling of :func:`cosine_near_dups`)."""
+    at a caller-chosen band width (approximate by design; candidate set
+    deterministic, verification cosine exact).  The threshold is applied
+    inside the pair kernel, so sub-threshold pairs never leave Python;
+    :func:`cosine_near_dups_scaled` sizes the width from the corpus."""
     return _banded_pairs(vectors, rows_per_band, bands, vec_col, id_col,
                          threshold)
 
@@ -746,11 +666,10 @@ def cosine_near_dups_scaled(vectors: DataFrame, threshold: float,
     """Width-adaptive thresholded near-dup pairs — the certified DEFAULT
     embedding-dedup surface.  One ``count()`` sizes the band width via
     :func:`band_width_for` so E[random candidates] stays ~linear in the
-    corpus (the fixed-width variants admit a fixed fraction of all N²
-    pairs — measured as a 30x candidate blowup at a 10x scale-up); the
-    verification cosine is exact and the candidate set is a deterministic
-    pure function of the corpus, so a SQL oracle can replay it.  The same
-    count sizes the first Python pass."""
+    corpus (a width fixed in advance admits a fixed fraction of all N²
+    pairs); the verification cosine is exact and the candidate set is a
+    deterministic pure function of the corpus, so a SQL oracle can replay
+    it.  The same count sizes the first Python pass and the exchange."""
     n = vectors.count()
     r = band_width_for(n, bands, candidates_per_vector)
     return _banded_pairs(vectors, r, bands, vec_col, id_col, threshold, n)
@@ -978,29 +897,18 @@ def tfidf_cosine_topk(docs: DataFrame, k: int = 10, n_queries: int = 5,
             .filter(F.col("rank") <= k))
 
 
-def cosine_top_pairs(vectors: DataFrame, top_n: int = 20,
-                     probe_hamming: int = 2, vec_col: str = "embedding",
-                     id_col: str = "vec_id") -> DataFrame:
-    """Most-similar vector pairs (embedding near-dup surface) among LSH
-    candidates: bucket equi-join pair generation + exact cosine + global
-    top-n (TakeOrdered — no full sort materialization)."""
-    return (lsh_candidate_pairs(vectors, probe_hamming, vec_col, id_col)
-            .orderBy(F.desc("cos_sim"), F.asc("vec_a"), F.asc("vec_b"))
-            .limit(top_n))
-
-
 def cosine_top_pairs_scaled(vectors: DataFrame, top_n: int = 20,
                             bands: int = 4,
                             candidates_per_vector: int = 100,
                             vec_col: str = "embedding",
                             id_col: str = "vec_id") -> DataFrame:
-    """Width-adaptive top pairs: the 100 TB form of
-    :func:`cosine_top_pairs`.  One count() sizes the band width via
-    :func:`band_width_for`, holding E[random candidates] ~ linear in the
-    corpus instead of quadratic (fixed-width at 10x the corpus admits
-    100x the candidates — measured 90 s vs ~14 s on the same data).
-    Approximate by design; deterministic given the corpus (the width is a
-    pure function of the row count)."""
+    """Most-similar vector pairs among width-adaptive banded-LSH
+    candidates: exact cosine, then a global top-n (TakeOrdered, no full
+    sort).  One count() sizes the band width via :func:`band_width_for`,
+    holding E[random candidates] ~ linear in the corpus instead of
+    quadratic, and sizes the Python passes.  Approximate by design;
+    deterministic given the corpus (the width is a pure function of the
+    row count)."""
     n = vectors.count()
     r = band_width_for(n, bands, candidates_per_vector)
     return (_banded_pairs(vectors, r, bands, vec_col, id_col, n_rows=n)
@@ -1059,8 +967,10 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
 
     Scale shape (100 TB): codebook training reads the corpus iters+1
     times per subspace with only ks centroid rows reaching the driver
-    (the corpus relation is persisted across the m loops; a production
-    trainer would fuse the m independent sub-problems into one pass);
+    (the corpus relation is persisted across the m loops and unpersisted
+    once the codebooks are on the driver, so the returned plan re-reads
+    the scan and nothing stays cached; a production trainer would fuse
+    the m independent sub-problems into one pass);
     encoding is one projection — no join, no shuffle; query scoring
     broadcasts Q queries against the m-byte code relation, so the scan
     moves |corpus|·m bytes instead of |corpus|·dim floats.  Ranking is a
@@ -1078,8 +988,12 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     sub = dim // m
     v = vectors.select(F.col(id_col).alias("neighbor_id"),
                        as_double(vec_col).alias("v")).persist()
-    books = pq_codebooks(
-        v.select(F.col("neighbor_id").alias("id"), "v"), m, ks, iters, dim)
+    try:
+        books = pq_codebooks(
+            v.select(F.col("neighbor_id").alias("id"), "v"), m, ks, iters,
+            dim)
+    finally:
+        v.unpersist()
 
     codes = v.select(
         "neighbor_id",
@@ -1308,11 +1222,15 @@ def ivfpq_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     in-flight form re-trains the codebooks on every run — the
     certification shape.  The production serving shape trains once and
     probes a PERSISTED index (``persist.write_ivfpq`` /
-    ``persist.ivfpq_probe_persisted``).
+    ``persist.ivfpq_probe_persisted``).  The training relations are
+    unpersisted once the codebooks are on the driver, so the returned
+    plan re-reads the scan and nothing stays cached.
     """
-    cent, books, codes, _cached = ivfpq_train(
+    cent, books, codes, cached = ivfpq_train(
         vectors, n_centroids, coarse_iters, m, ks, pq_iters, dim,
         vec_col, id_col)
+    for df in cached:
+        df.unpersist()
     return ivfpq_score(codes, queries, cent, books, k=k, nprobe=nprobe,
                        dim=dim, vec_col=vec_col, q_id_col=q_id_col)
 
@@ -1337,9 +1255,8 @@ def _semdedup_assignments(vectors: DataFrame, k: int, iters: int, dim: int,
     dominant cost (pairs ∝ Σ cluster²), and cosine(va, vb) evaluated
     per pair costs THREE array folds (dot + both norms recomputed per
     candidate).  Normalizing on the inputs makes the per-pair work one
-    dot fold — the same projection-collapsing lesson
-    lsh_candidate_pairs documents.  The oracle computes the identical
-    normalized form, so the 6-dp rounded value stays engine-exact."""
+    dot fold.  The oracle computes the identical normalized form, so the
+    6-dp rounded value stays engine-exact."""
     v = vectors.select(F.col(id_col).alias("vec_id"),
                        as_double(vec_col).alias("v"))
     cent = _lloyd_centroids(

@@ -62,7 +62,7 @@ def _interleaved(dicts: list[dict]) -> dict:
 # Flagship heavies: keep a hard driver row for these fresh every round even
 # when the rotation is busy clearing the never-verified backlog.
 _FLAGSHIPS = ("search_bm25_topk", "dedup_minhash_near", "dedup_clusters",
-              "sim_cosine_near_dups", "rel_pricing_summary")
+              "sim_cosine_near_dups_banded", "rel_pricing_summary")
 
 
 _LAST_GREEN_CACHE: dict | None = None

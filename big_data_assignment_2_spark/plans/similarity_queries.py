@@ -10,9 +10,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import (NUM_PLANES, PLANE_MOD, brute_force_topk,
-                                    cosine_near_dups, cosine_near_dups_banded,
-                                    cosine_top_pairs, kmeans_assign, lsh_topk,
-                                    probe_masks)
+                                    cosine_near_dups_banded, kmeans_assign,
+                                    lsh_topk)
 from ..sources.io import load_table
 
 TOP_K = 10
@@ -45,14 +44,6 @@ def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("bucket").agg(F.count("*").alias("n_vectors")))
 
 
-PROBE_HAMMING = 2  # candidate pairs = buckets within 2 bit flips
-
-
-def q_cosine_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    em = load_table(spark, sf_dir, "embeddings")
-    return cosine_top_pairs(em, top_n=TOP_PAIRS, probe_hamming=PROBE_HAMMING)
-
-
 # Banded sign-LSH: 3 bands x 4 planes.  Width 4 is sized to THIS corpus
 # (near-orthogonal embeddings, dup threshold 0.4 -> per-plane agreement
 # ~0.63, so per-band recall 0.63^4 ~ 0.16, OR of 3 bands ~ 0.41 of the
@@ -79,8 +70,7 @@ def q_cosine_top_pairs_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle re-derives the SAME r from ``count(*)`` in SQL and
     evaluates the plane sums for runtime r via nested
     ``list_transform(range(...))`` lambdas — the full adaptive pipeline
-    (width choice included) is hash-certified at every scale, not just the
-    fixed-width twin."""
+    (width choice included) is hash-certified at every scale."""
     from ..operators.similarity import cosine_top_pairs_scaled
 
     em = load_table(spark, sf_dir, "embeddings")
@@ -97,27 +87,13 @@ def q_cosine_near_dups_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CERTIFIED DEFAULT embedding near-dup surface: width-adaptive
     banded sign-LSH candidates (r sized from the corpus row count via
     band_width_for, so E[random candidates] stays ~linear in N), exact
-    cosine verification, threshold filter.  The fixed-width
-    ``sim_cosine_near_dups`` / ``sim_cosine_top_pairs`` rows remain
-    registered for round-over-round continuity only — their fixed bucket
-    space admits a fixed fraction of all N² pairs and is NOT the 100 TB
-    path."""
+    cosine verification, threshold filter."""
     from ..operators.similarity import cosine_near_dups_scaled
 
     em = load_table(spark, sf_dir, "embeddings")
     return cosine_near_dups_scaled(em, COSINE_DUP_THRESHOLD,
                                    bands=SCALED_BANDS,
                                    candidates_per_vector=SCALED_CPV)
-
-
-def q_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Thresholded embedding near-dup pairs (the dedup-by-vector surface):
-    pair generation is the LSH bucket equi-join (plus ≤2-bit probes), never
-    all-pairs — the oracle replicates the same deterministic candidate
-    set, so recall is part of the checked semantics."""
-    em = load_table(spark, sf_dir, "embeddings")
-    return cosine_near_dups(em, COSINE_DUP_THRESHOLD,
-                            probe_hamming=PROBE_HAMMING)
 
 
 def q_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1178,11 +1154,9 @@ QUERIES = {
     "sim_sq8_compact_probe": q_sq8_compact_probe,
     "sim_kmeans_assign": q_kmeans_assign,
     "sim_quantize_int8": q_quantize_int8,
-    "sim_cosine_near_dups": q_cosine_near_dups,
     "sim_ann_bruteforce": q_ann_bruteforce,
     "sim_ann_lsh": q_ann_lsh,
     "sim_lsh_buckets": q_lsh_buckets,
-    "sim_cosine_top_pairs": q_cosine_top_pairs,
     "sim_cosine_banded": q_cosine_banded,
     "sim_cosine_top_pairs_scaled": q_cosine_top_pairs_scaled,
     "sim_cosine_near_dups_banded": q_cosine_near_dups_banded,
@@ -1220,27 +1194,6 @@ _BUCKET_EXPR = " + ".join(
         THEN {1 << p} ELSE 0 END)"""
     for p in range(NUM_PLANES))
 
-# LSH-candidate pair CTE: replicates lsh_candidate_pairs exactly — probe
-# masks come from the same probe_masks() list (candidate set bit-identical)
-# and the cosine is computed the same way (normalize each element by the
-# row's L2 norm, then a single in-order dot product) so the 6-dp rounding
-# agrees across engines.
-_CAND_CTES = f"""
-bv AS (SELECT vec_id,
-              list_transform(v, x -> x / sqrt(list_sum(
-                  list_transform(v, y -> y * y)))) AS vn,
-              {_BUCKET_EXPR} AS bucket
-       FROM vecs),
-pr AS (SELECT vec_id, vn,
-              unnest(list_transform({probe_masks(PROBE_HAMMING)},
-                                    m -> xor(bucket, CAST(m AS BIGINT)))) AS bucket
-       FROM bv),
-cand AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         round(list_sum(list_transform(range(1, 65),
-                                       i -> a.vn[i] * b.vn[i])), 6) AS cos_sim
-  FROM pr a JOIN bv b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-"""
 
 def _sq_dist(x: str, c: str) -> str:
     return (f"list_sum(list_transform(range(1, 65), "
@@ -1947,11 +1900,6 @@ SELECT vec_id, round(scale, 6) AS scale,
            AS max_recon_err
 FROM q
 """,
-    "sim_cosine_near_dups": f"""
-WITH {_VECS}, {_CAND_CTES}
-SELECT vec_a, vec_b, cos_sim FROM cand
-WHERE cos_sim >= {COSINE_DUP_THRESHOLD}
-""",
     "sim_ann_bruteforce": f"""
 WITH {_VECS},
 q AS (SELECT vec_id AS query_id, v FROM vecs WHERE vec_id < {N_QUERIES}),
@@ -1991,12 +1939,6 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM (
                             ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
   FROM scored)
 WHERE rank <= {TOP_K}
-""",
-    "sim_cosine_top_pairs": f"""
-WITH {_VECS}, {_CAND_CTES}
-SELECT vec_a, vec_b, cos_sim FROM cand
-ORDER BY cos_sim DESC, vec_a ASC, vec_b ASC
-LIMIT {TOP_PAIRS}
 """,
     # Banded sign-LSH: buckets on the RAW vector (sign-LSH is
     # scale-invariant; banded_lsh_candidate_pairs does the same), scoring

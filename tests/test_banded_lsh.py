@@ -181,7 +181,7 @@ def test_scaled_pass_is_two_python_maps(spark, sf_dir, job_count):
     smaller than an Arrow batch every stage runs one task."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     saved = spark.conf.get(key)
-    spark.conf.set(key, "10000")  # the default; codec stages lower it
+    spark.conf.set(key, "10000")  # the default; the bound assumes it
     try:
         df = cosine_near_dups_scaled(
             load_table(spark, sf_dir, "embeddings"), threshold=0.4)

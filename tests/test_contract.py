@@ -11,8 +11,7 @@ import __spark_entry__ as contract
 
 # Queries whose semantics legitimately may return 0 rows at tiny scale.
 MAY_BE_EMPTY = {"rel_join_anti", "dedup_simhash_near", "dedup_winnow_overlap",
-                "sim_cosine_near_dups", "sim_cosine_near_dups_banded",
-                "dedup_minhash_near",
+                "sim_cosine_near_dups_banded", "dedup_minhash_near",
                 "dedup_ngram_jaccard", "search_phrase_match",
                 "stream_interval_join_1h", "text_contamination"}
 

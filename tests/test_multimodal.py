@@ -205,6 +205,63 @@ def test_png_decode_on_spark(spark, sf_dir):
         assert r["pix_sum"] == exp
 
 
+def test_codec_stages_leave_arrow_batch_conf_alone(spark):
+    """The PNG and JPEG stages slice batches to ``batch_size`` inside the
+    worker and never write ``arrow.maxRecordsPerBatch``: the conf reads
+    the same after a run, and the rows equal those of a run with the conf
+    pinned to ``batch_size``."""
+    from big_data_assignment_2_spark.operators.multimodal import (
+        decode_media_jpeg, decode_media_png, generate_media_jpeg,
+        generate_media_png)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    docs = spark.range(0, 50).withColumnRenamed("id", "doc_id")
+
+    def run():
+        png = decode_media_png(generate_media_png(docs, batch_size=16),
+                               batch_size=16).collect()
+        jpg = decode_media_jpeg(generate_media_jpeg(docs, batch_size=16),
+                                batch_size=16).collect()
+        return sorted(map(tuple, png)), sorted(map(tuple, jpg))
+
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "10000")
+        got = run()
+        assert spark.conf.get(key) == "10000"
+        spark.conf.set(key, "16")
+        assert run() == got
+    finally:
+        spark.conf.set(key, saved)
+    assert len(got[0]) == len(got[1]) == 50
+
+
+def test_map_in_batches_slices_each_arrow_batch(spark):
+    """One 100-row Arrow batch reaches the function as <= 16-row frames,
+    each with a fresh 0-based index."""
+    import pandas as pd
+
+    from big_data_assignment_2_spark.operators.multimodal import (
+        _map_in_batches)
+
+    def sizes(frames):
+        for pdf in frames:
+            assert pdf.index[0] == 0
+            yield pd.DataFrame({"n": [len(pdf)],
+                                "lo": [int(pdf["id"].iat[0])]})
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "10000")
+        frames = _map_in_batches(spark.range(0, 100, numPartitions=1),
+                                 sizes, "n long, lo long", 16).collect()
+    finally:
+        spark.conf.set(key, saved)
+    assert sorted(r["n"] for r in frames) == [4] + [16] * 6
+    assert sorted(r["lo"] for r in frames) == list(range(0, 100, 16))
+
+
 def test_mp4_box_roundtrip_and_corruption():
     """ISO BMFF generator/parser agreement at the byte level, plus
     rejection of corrupt structures."""

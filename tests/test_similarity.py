@@ -199,6 +199,24 @@ def test_ivfpq_degenerate_residuals_reduce_to_coarse_distance(spark):
         assert r["adc_dist"] == d2(r["neighbor_id"] % 8)
 
 
+def test_pq_paths_leave_nothing_cached(spark, sf_dir):
+    """``pq_topk`` and ``ivfpq_topk`` persist the corpus only while
+    training: once the codebooks are on the driver the relations are
+    unpersisted, so a collected result leaves the cache manager empty."""
+    from big_data_assignment_2_spark.operators.similarity import (
+        ivfpq_topk, pq_topk)
+    from big_data_assignment_2_spark.sources.io import load_table
+
+    em = load_table(spark, sf_dir, "embeddings")
+    q = em.filter("vec_id < 2").selectExpr("vec_id AS query_id", "embedding")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert len(pq_topk(em, q, k=4, m=4, ks=8, iters=1).collect()) == 8
+    assert cache.isEmpty()
+    assert len(ivfpq_topk(em, q, k=4, n_centroids=4, m=4, ks=8).collect()) == 8
+    assert cache.isEmpty()
+
+
 def test_sq8_zero_vector_reconstructs_finite(spark):
     """Zero-vector guard (r14 advice): an all-zero embedding must
     dequantize to exactly zeros (not NULL/NaN from a 0 divisor), and a

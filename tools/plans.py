@@ -22,9 +22,9 @@ PLAN_SET = [
     "win_running_total",
     "dedup_minhash_near",
     "dedup_simhash_near",
-    "sim_cosine_top_pairs",
-    # sim_cosine_banded omitted: its plan is two mapInPandas passes around
-    # one (band, bucket) exchange (plans/r05 has the scaled rows).
+    # The vector near-dup rows (sim_cosine_banded and the _scaled /
+    # _banded rows) are omitted: each plan is two mapInPandas passes
+    # around one (band, bucket) exchange (plans/r05 has the scaled rows).
     "sim_ann_lsh",
     "sim_tfidf_topk",
     "pipeline_pack_sequences",
@@ -34,10 +34,10 @@ PLAN_SET = [
     "events_funnel",
     "graph_triangles_trade",
     "dedup_prefix_jaccard",
-    # sim_pq_topk omitted like sim_cosine_banded: the codebook / distance
-    # tables are plan-time literal arrays that swamp the detail section;
-    # the shape is codes-projection -> broadcast query cross join ->
-    # per-query window (audited in-round, see TODO.md).
+    # sim_pq_topk omitted: the codebook / distance tables are plan-time
+    # literal arrays that swamp the detail section; the shape is
+    # codes-projection -> broadcast query cross join -> per-query window
+    # (audited in-round, see TODO.md).
     "win_range_frame",
     # r11: the ExactSubstr span plan — in-row shingle hashing over the
     # materialized token array, map-side-partial duplicated-set agg,
