@@ -46,39 +46,36 @@ def md5_hash64_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5(CAST({expr} AS VARCHAR)), 1, 15) AS BIGINT)"
 
 
+def _minhash_term_hash_sql(expr: str) -> str:
+    """:func:`minhash_term_hash` of a string ``expr`` as Spark SQL."""
+    return (f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+            f" % {MERSENNE_P}")
+
+
 def minhash_term_hash(col: Column | str) -> Column:
     """Base hash for MinHash: md5-derived, reduced mod P."""
     return md5_hash64(col) % F.lit(MERSENNE_P)
-
-
-def minhash_sig_aggs(hash_col: str = "h") -> list[Column]:
-    """The 16 min-aggregations producing a MinHash signature."""
-    return [
-        F.min((F.lit(a) * F.col(hash_col) + F.lit(b)) % F.lit(MERSENNE_P))
-        .alias(f"sig{i}")
-        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    ]
 
 
 def minhash_sig_array_cols(h_col: str = "__h") -> list[Column]:
     """In-row MinHash signature from a pre-hashed token array column
     (``transform(toks, minhash_term_hash)``): per slot,
     ``array_min`` over the affine family — map-side, no explode, no
-    shuffle.  Result-identical to :func:`minhash_sig_aggs` over the
+    shuffle.  Result-identical to :func:`minhash_sql_exprs` over the
     exploded tokenset (min over the same multiset).  Keep the base-hash
     array as its own projection so codegen evaluates the md5s once, not
     once per slot."""
     return [
-        F.array_min(F.transform(
-            F.col(h_col),
-            lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MERSENNE_P)))
-        .alias(f"sig{i}")
+        F.expr(f"array_min(transform({h_col}, x -> ({a} * x + {b}) % "
+               f"{MERSENNE_P})) AS sig{i}")
         for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
 
 
 def minhash_sql_exprs(hash_expr: str = "h") -> list[str]:
-    """DuckDB twins of :func:`minhash_sig_aggs`."""
+    """The 16 min-aggregations producing a MinHash signature, as SQL both
+    engines parse: ``F.expr`` each for Spark; the DuckDB oracles embed
+    them verbatim."""
     return [
         f"min(({a} * {hash_expr} + {b}) % {MERSENNE_P}) AS sig{i}"
         for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_hash64, minhash_sig_aggs, minhash_term_hash
+from ..functions.hashing import md5_hash64, minhash_sql_exprs, minhash_term_hash
 from ..functions.text import tokenize
 
 NUM_BANDS = 4
@@ -76,7 +76,8 @@ def doc_tokensets(docs: DataFrame, text_col: str = "text",
 def minhash_signatures(tokensets: DataFrame) -> DataFrame:
     """16-slot MinHash signature per doc: one hash-agg shuffle."""
     h = tokensets.select("doc_id", minhash_term_hash("term").alias("h"))
-    return h.groupBy("doc_id").agg(*minhash_sig_aggs("h"))
+    return h.groupBy("doc_id").agg(
+        *[F.expr(e) for e in minhash_sql_exprs("h")])
 
 
 def minhash_signatures_from_arrays(arrays: DataFrame,
@@ -96,12 +97,13 @@ def minhash_signatures_from_arrays(arrays: DataFrame,
 
 def _band_key_array() -> Column:
     """The NUM_BANDS band keys of a ``sig0..sig15`` row, as one array:
-    md5 of each band's comma-joined slots."""
-    return F.array(*[
-        F.md5(F.concat_ws(",", *[F.col(f"sig{b * BAND_SIZE + r}").cast("string")
-                                 for r in range(BAND_SIZE)]))
-        for b in range(NUM_BANDS)
-    ])
+    md5 of each band's comma-joined slots (one SQL expression)."""
+    keys = ", ".join(
+        "md5(concat_ws(',', " + ", ".join(
+            f"CAST(sig{b * BAND_SIZE + r} AS STRING)"
+            for r in range(BAND_SIZE)) + "))"
+        for b in range(NUM_BANDS))
+    return F.expr(f"array({keys})")
 
 
 def lsh_band_keys(signatures: DataFrame) -> DataFrame:
@@ -186,8 +188,9 @@ def _minhash_rep_structure(docs: DataFrame, threshold: float,
     """Shared core of the MinHash-LSH pipeline: exact-dup group structure
     plus verified near-dup pairs computed on one REPRESENTATIVE per
     distinct token set.  Returns ``(groups, rep_pairs)``: ``groups`` =
-    (``__rep``, ``__members``, ``__toks``), one row per distinct token
-    set with its sorted member ids and ``__rep`` = the min member;
+    (``__gkey``, ``__rep``, ``__members``, ``__toks``), one row per
+    distinct token set with its sorted member ids and ``__rep`` = the
+    min member;
     ``rep_pairs`` = verified (``__ra`` < ``__rb``, ``__ma``, ``__mb``,
     ``jaccard``) over representatives of non-empty token sets only.
     Docs with no tokens share the empty set's group and never pair: the
@@ -205,6 +208,10 @@ def _minhash_rep_structure(docs: DataFrame, threshold: float,
       intra-group pairs, cluster labels) reads both aggregate columns,
       so column pruning never splits the aggregate and Spark reuses its
       exchange.
+    - **Signatures ride the groups exchange**: the exploded tokens are
+      hashed and min-aggregated by the oracle's own SQL, grouped on
+      (``__gkey``, ``__rep``, ``__sz``), which the ``__gkey``
+      partitioning already satisfies: no exchange, no ``transform``.
     - **Band exchange**: narrow rows (rep, set size, 4 band keys)
       ``posexplode_outer``-ed and repartitioned to the session's
       ``spark.sql.shuffle.partitions`` on (band_id, band_key); both
@@ -229,7 +236,7 @@ def _minhash_rep_structure(docs: DataFrame, threshold: float,
     ``collect`` (which re-ran the tokenize lineage before the real plan)
     never fired below 4,096 rows per bucket.
     """
-    from ..functions.hashing import minhash_sig_array_cols
+    from ..functions.hashing import _minhash_term_hash_sql
 
     toks = F.sort_array(F.array_distinct(tokenize(text_col)))
     groups = (docs.select(F.col(id_col).cast("bigint").alias("__nid"),
@@ -237,12 +244,15 @@ def _minhash_rep_structure(docs: DataFrame, threshold: float,
               .groupBy(F.md5(F.array_join("__toks", " ")).alias("__gkey"))
               .agg(F.sort_array(F.collect_list("__nid")).alias("__members"),
                    F.first("__toks").alias("__toks"))
-              .select(F.element_at("__members", 1).alias("__rep"),
+              .select("__gkey", F.element_at("__members", 1).alias("__rep"),
                       "__members", "__toks"))
     sigs = (groups.filter(F.size("__toks") > 0)
-            .select("__rep", F.size("__toks").alias("__sz"),
-                    F.transform("__toks", minhash_term_hash).alias("__h"))
-            .select("__rep", "__sz", *minhash_sig_array_cols("__h")))
+            .select("__gkey", "__rep", F.size("__toks").alias("__sz"),
+                    F.explode("__toks").alias("__t"))
+            .select("__gkey", "__rep", "__sz",
+                    F.expr(_minhash_term_hash_sql("__t")).alias("h"))
+            .groupBy("__gkey", "__rep", "__sz")
+            .agg(*[F.expr(e) for e in minhash_sql_exprs("h")]))
     n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     bands = (sigs.select("__rep", "__sz", _band_key_array().alias("__keys"))
              .select("__rep", "__sz", "__keys",

@@ -389,7 +389,7 @@ def bm25_probe_persisted_batch(spark: SparkSession, base_path: str,
     Returns (query_id, doc_id, score, rank ≤ k)."""
     from ..functions.localrel import inline_rows
     from ..functions.text import tokenize_query
-    from .search import bm25_literal_score, rank_per_query
+    from .search import bm25_literal_score, _sum_rank_per_query
 
     q_terms = [(qid, t) for qid, q in queries.items()
                for t in tokenize_query(q)]
@@ -400,12 +400,9 @@ def bm25_probe_persisted_batch(spark: SparkSession, base_path: str,
         return spark.createDataFrame(
             [], "query_id string, doc_id string, score double, rank int")
     terms_df = inline_rows(spark, rows, "query_id string, term string")
-    scored = (postings.join(F.broadcast(terms_df), "term")
-              .join(lengths, "doc_id")
-              .groupBy("query_id", "doc_id")
-              .agg(F.round(F.sum(bm25_literal_score(n, avgdl, df)), 6)
-                   .alias("score")))
-    return rank_per_query(scored, k)
+    return _sum_rank_per_query(
+        postings.join(F.broadcast(terms_df), "term").join(lengths, "doc_id"),
+        bm25_literal_score(n, avgdl, df), k)
 
 
 def write_ivf(assigned: DataFrame, path: str) -> None:
@@ -726,7 +723,7 @@ def ivfpq_probe_persisted(spark: SparkSession, base_path: str,
     itself stays fully distributed via :func:`similarity.ivfpq_score`,
     so the result is column-for-column identical to the in-flight
     ``ivfpq_topk`` on the same parameters."""
-    from .similarity import as_double, ivfpq_score
+    from .similarity import _nearest_ids, as_double, ivfpq_score
 
     cent, books = _read_ivfpq_codebooks(spark, base_path)
 
@@ -735,20 +732,9 @@ def ivfpq_probe_persisted(spark: SparkSession, base_path: str,
     # the literals a partition-pruned scan needs.
     q = queries.select(F.col(q_id_col).alias("query_id"),
                        as_double(vec_col).alias("q"))
-    cent_arr = F.array(*[
-        F.array(*[F.lit(float(x)) for x in c]) for c in cent])
-    dists = F.transform(
-        cent_arr,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("q"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x))
-    ranked = F.array_sort(F.zip_with(
-        dists, F.sequence(F.lit(0), F.lit(len(cent) - 1)),
-        lambda d, i: F.struct(d.alias("d"), i.alias("cid"))))
-    probed = (q.select(F.explode(
-        F.transform(F.slice(ranked, 1, nprobe),
-                    lambda s: s.getField("cid"))).alias("list_id"))
-        .distinct().collect())
+    probed = (q.select(F.explode(_nearest_ids(F.col("q"), cent, nprobe))
+                       .alias("list_id"))
+              .distinct().collect())
     list_ids = sorted(r["list_id"] for r in probed)
 
     codes = spark.read.parquet(f"{base_path}/codes") \

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.localrel import inline_rows
+from ..functions.localrel import inline_rows, json_literal
 from ..functions.scoring import B_DEFAULT, K1_DEFAULT, bm25_term_score, idf_plain
 from ..functions.text import tokenize, tokenize_query
 
@@ -111,22 +111,9 @@ def bm25_topk_batch(spark: SparkSession, queries: dict[str, str],
         return spark.createDataFrame(
             [], "query_id string, doc_id string, score double, rank int")
     terms_df = inline_rows(spark, rows, "query_id string, term string")
-    stats = F.broadcast(documents_info.agg(
-        F.count("*").alias("__n"), F.avg("length").alias("__avgdl")))
-    scored = (
-        term_document.join(F.broadcast(terms_df), "term")
-        .join(F.broadcast(
-            document_frequency.join(
-                F.broadcast(terms_df.select("term").distinct()), "term")
-            .filter(F.col("df") > 0)), "term")
-        .join(documents_info.select("doc_id", "length"), "doc_id")
-        .crossJoin(stats)
-        .withColumn("term_score",
-                    bm25_term_score(F.col("tf"), idf_plain(F.col("df"), F.col("__n")),
-                                    F.col("length"), F.col("__avgdl"), k1, b))
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("score")))
-    return rank_per_query(scored, k)
+    return _sum_rank_per_query(
+        _bm25_term_rows(terms_df, term_document, document_frequency,
+                        documents_info, k1, b), F.col("term_score"), k)
 
 
 def rank_per_query(scored: DataFrame, k: int) -> DataFrame:
@@ -140,10 +127,23 @@ def rank_per_query(scored: DataFrame, k: int) -> DataFrame:
             .filter(F.col("rank") <= k))
 
 
+def _sum_rank_per_query(scored: DataFrame, term_score: Column,
+                        k: int) -> DataFrame:
+    """The batch probes' tail (:func:`bm25_topk_batch`,
+    ``persist.bm25_probe_persisted_batch``): ``term_score`` summed per
+    (query_id, doc_id), rounded to 6 dp, and :func:`rank_per_query`.
+    Hash-partitioning on query_id ONCE, before the sum, satisfies both
+    the sum's and the window's distribution: one exchange, not two."""
+    return rank_per_query(
+        scored.repartition("query_id")
+        .groupBy("query_id", "doc_id")
+        .agg(F.round(F.sum(term_score), 6).alias("score")), k)
+
+
 def _term_lookup(values: dict) -> Column:
-    """``values[term]`` for the row's ``term``, as a literal map lookup."""
-    return F.create_map(*[F.lit(x) for kv in sorted(values.items())
-                          for x in kv])[F.col("term")]
+    """``values[term]`` for the row's ``term``, as ONE literal map lookup."""
+    return json_literal(dict(sorted(values.items())),
+                        "map<string,bigint>")[F.col("term")]
 
 
 def bm25_literal_score(n: int, avgdl: float, df: dict[str, int],
@@ -169,23 +169,31 @@ def _bm25_scores_from_terms(terms_df: DataFrame, term_document: DataFrame,
     :func:`bm25_scores` and :func:`bm25_fuzzy_topk`.  Same plan as the
     module docstring: broadcast terms ⋈ postings ⋈ df ⋈ stats → BM25
     expr → per-doc sum."""
+    return (_bm25_term_rows(terms_df, term_document, document_frequency,
+                            documents_info, k1, b)
+            .groupBy("doc_id").agg(F.sum("term_score").alias("score")))
+
+
+def _bm25_term_rows(terms_df: DataFrame, term_document: DataFrame,
+                    document_frequency: DataFrame, documents_info: DataFrame,
+                    k1: float, b: float) -> DataFrame:
+    """One row per (query-term row, doc) with its BM25 ``term_score``:
+    broadcast terms ⋈ postings ⋈ df ⋈ doc lengths ⋈ stats.  ``terms_df``
+    has a ``term`` column and may carry a ``query_id`` (batch path)."""
     stats = F.broadcast(documents_info.agg(
         F.count("*").alias("__n"), F.avg("length").alias("__avgdl")))
-    candidate = (
+    return (
         term_document.join(F.broadcast(terms_df), "term")
         .join(F.broadcast(
-            document_frequency.join(F.broadcast(terms_df.distinct()), "term")
+            document_frequency.join(
+                F.broadcast(terms_df.select("term").distinct()), "term")
             .filter(F.col("df") > 0)  # P7 (`query.py:165-167`)
         ), "term")
         .join(documents_info.select("doc_id", "length"), "doc_id")
         .crossJoin(stats)
-    )
-    scored = candidate.withColumn(
-        "term_score",
-        bm25_term_score(F.col("tf"), idf_plain(F.col("df"), F.col("__n")),
-                        F.col("length"), F.col("__avgdl"), k1, b),
-    )
-    return scored.groupBy("doc_id").agg(F.sum("term_score").alias("score"))
+        .withColumn("term_score", bm25_term_score(
+            F.col("tf"), idf_plain(F.col("df"), F.col("__n")),
+            F.col("length"), F.col("__avgdl"), k1, b)))
 
 
 def fuzzy_expand_terms(terms_df: DataFrame, document_frequency: DataFrame,

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.localrel import json_literal
 from ..functions.rounding import spark_round6, spark_round6_array
 
 NUM_PLANES = 8
@@ -94,17 +95,14 @@ def lsh_bucket(vec: Column, num_planes: int = NUM_PLANES,
             F.aggregate(
                 F.zip_with(
                     vec,
-                    F.array(*[F.lit(plane_weight_value(plane_offset + p, d))
-                              for d in range(64)]),
+                    json_literal([plane_weight_value(plane_offset + p, d)
+                                  for d in range(64)], "array<double>"),
                     lambda x, w: F.coalesce(x * w, F.lit(0.0))),
                 F.lit(0.0), lambda acc, x: acc + x) >= 0,
             F.lit(1 << p)).otherwise(F.lit(0))
         for p in range(num_planes)
     ]
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out
+    return sum(bits, F.lit(0))
 
 
 def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
@@ -255,6 +253,34 @@ def ivf_build(vectors: DataFrame, n_centroids: int = 16, sample: int = 2048,
     return assigned, cent
 
 
+def _matrix_literal(rows) -> Column:
+    """Float vectors (centroids, sub-codebooks) as ONE
+    ``array<array<double>>`` literal: a single JSON literal the optimizer
+    folds (``functions.localrel.json_literal``), bit-identical to
+    nesting ``F.lit(float(x))`` per value at a constant py4j cost."""
+    return json_literal([[float(x) for x in r] for r in rows],
+                        "array<array<double>>")
+
+
+def _sq_dists(vec: Column, rows) -> Column:
+    """Squared L2 distance from ``vec`` to each of the float vectors
+    ``rows``, as one array (a fold in dimension order per row).  The
+    lambda takes one argument: a second one would be the row INDEX."""
+    return F.transform(
+        _matrix_literal(rows),
+        lambda c: F.aggregate(F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
+                              F.lit(0.0), lambda acc, x: acc + x))
+
+
+def _nearest_ids(vec: Column, rows, n: int) -> Column:
+    """The ids (0-based positions) of the ``n`` rows nearest ``vec``,
+    nearest first, ties to the lower id."""
+    ranked = F.array_sort(F.zip_with(
+        _sq_dists(vec, rows), F.sequence(F.lit(0), F.lit(len(rows) - 1)),
+        lambda d, i: F.struct(d.alias("d"), i.alias("cid"))))
+    return F.transform(F.slice(ranked, 1, n), lambda s: s.getField("cid"))
+
+
 def _nearest_centroid_expr(vec: Column, centroids) -> Column:
     """argmin over squared distances, as pure column arithmetic (the
     centroid constants are folded into codegen — no UDF, no shuffle).
@@ -265,12 +291,7 @@ def _nearest_centroid_expr(vec: Column, centroids) -> Column:
     fast even at k×dim = thousands of constants.  `array_position` of the
     min returns the FIRST match, i.e. ties break to the lowest centroid
     id (same rule the SQL oracles use)."""
-    cent_arr = F.array(*[
-        F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
-    dists = F.transform(
-        cent_arr,
-        lambda c: F.aggregate(F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-                              F.lit(0.0), lambda acc, x: acc + x))
+    dists = _sq_dists(vec, centroids)
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
@@ -316,9 +337,8 @@ def _assign_nearest(v: DataFrame, centroids, vec_col: str = "v",
         out = v.withColumn(out_col,
                            _nearest_centroid_expr(F.col(vec_col), centroids))
         if dist_col is not None:
-            cent_arr = F.array(*[
-                F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
-            own = F.element_at(cent_arr, F.col(out_col) + 1)
+            own = F.element_at(_matrix_literal(centroids),
+                               F.col(out_col) + 1)
             out = out.withColumn(dist_col, F.aggregate(
                 F.zip_with(F.col(vec_col), own,
                            lambda a, b: (a - b) * (a - b)),
@@ -783,25 +803,13 @@ def ivf_topk_deterministic(vectors: DataFrame, queries: DataFrame,
     assigned = v.withColumn(
         "list_id", _nearest_centroid_expr(F.col("v"), cent).alias("list_id"))
 
-    cent_arr = F.array(*[
-        F.array(*[F.lit(float(x)) for x in c]) for c in cent])
     q_cols = [F.col(q_id_col).alias("query_id"),
               as_double(vec_col).alias("q")]
     if same_label_col is not None:
         q_cols.append(F.col(same_label_col).alias("__flbl"))
     q = queries.select(*q_cols)
-    dists = F.transform(
-        cent_arr,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("q"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x))
-    ranked = F.array_sort(F.zip_with(
-        dists, F.sequence(F.lit(0), F.lit(n_centroids - 1)),
-        lambda d, i: F.struct(d.alias("d"), i.alias("cid"))))
-    probes = (q.withColumn(
-        "list_id",
-        F.explode(F.transform(F.slice(ranked, 1, nprobe),
-                              lambda s: s.getField("cid")))))
+    probes = q.withColumn(
+        "list_id", F.explode(_nearest_ids(F.col("q"), cent, nprobe)))
 
     cand = assigned.join(F.broadcast(probes), "list_id")
     if same_label_col is not None:
@@ -1003,17 +1011,6 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     q = queries.select(F.col(q_id_col).alias("query_id"),
                        as_double(vec_col).alias("q"))
 
-    def _dtable(qs: Column, cents: list[list[float]]) -> Column:
-        # (a one-arg lambda is required: transform treats a second
-        # parameter as the element INDEX)
-        cent_arr = F.array(*[
-            F.array(*[F.lit(float(x)) for x in c]) for c in cents])
-        return F.transform(
-            cent_arr,
-            lambda c: F.aggregate(
-                F.zip_with(qs, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0), lambda acc, x: acc + x))
-
     # r17 (guide §1.2 per-task work): the per-subspace distance TABLE
     # depends only on the query row, so it is computed ONCE per query on
     # the broadcast side (m arrays of ks doubles) instead of per
@@ -1022,8 +1019,8 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     # candidate side pays m array lookups.  Value-identical: the same
     # expression over the same query slice, just evaluated earlier.
     q = q.select("query_id", "q",
-                 *[_dtable(F.slice("q", s * sub + 1, sub),
-                           books[s]).alias(f"__dt{s}")
+                 *[_sq_dists(F.slice("q", s * sub + 1, sub),
+                             books[s]).alias(f"__dt{s}")
                    for s in range(m)])
     joined = codes.crossJoin(F.broadcast(q)) \
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -1062,12 +1059,10 @@ def ivfpq_train(vectors: DataFrame, n_centroids: int = 4,
     cent = _lloyd_centroids(
         v.select(F.col("neighbor_id").alias("id"), "v"),
         n_centroids, coarse_iters, dim)
-    cent_arr = F.array(*[
-        F.array(*[F.lit(float(x)) for x in c]) for c in cent])
 
     res = (v.withColumn("list_id", _nearest_centroid_expr(F.col("v"), cent))
            .withColumn("rv", F.zip_with(
-               "v", F.element_at(cent_arr, F.col("list_id") + 1),
+               "v", F.element_at(_matrix_literal(cent), F.col("list_id") + 1),
                lambda x, y: x - y))
            .persist())
     books = pq_codebooks(
@@ -1094,13 +1089,11 @@ def ivfpq_encode(vectors: DataFrame, cent: list[list[float]],
     (``persist.ivfpq_append``)."""
     m = len(books)
     sub = dim // m
-    cent_arr = F.array(*[
-        F.array(*[F.lit(float(x)) for x in c]) for c in cent])
     v = vectors.select(F.col(id_col).alias("neighbor_id"),
                        as_double(vec_col).alias("v"))
     res = (v.withColumn("list_id", _nearest_centroid_expr(F.col("v"), cent))
            .withColumn("rv", F.zip_with(
-               "v", F.element_at(cent_arr, F.col("list_id") + 1),
+               "v", F.element_at(_matrix_literal(cent), F.col("list_id") + 1),
                lambda x, y: x - y)))
     return res.select(
         "neighbor_id", "list_id",
@@ -1134,35 +1127,13 @@ def ivfpq_score(codes: DataFrame, queries: DataFrame,
 
     m = len(books)
     sub = dim // m
-    n_centroids = len(cent)
-    cent_arr = F.array(*[
-        F.array(*[F.lit(float(x)) for x in c]) for c in cent])
     q = queries.select(F.col(q_id_col).alias("query_id"),
                        as_double(vec_col).alias("q"))
-    dists = F.transform(
-        cent_arr,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("q"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x))
-    ranked = F.array_sort(F.zip_with(
-        dists, F.sequence(F.lit(0), F.lit(n_centroids - 1)),
-        lambda d, i: F.struct(d.alias("d"), i.alias("cid"))))
     probes = (q.withColumn(
-        "list_id",
-        F.explode(F.transform(F.slice(ranked, 1, nprobe),
-                              lambda s: s.getField("cid"))))
+        "list_id", F.explode(_nearest_ids(F.col("q"), cent, nprobe)))
         .withColumn("qr", F.zip_with(
-            "q", F.element_at(cent_arr, F.col("list_id") + 1),
+            "q", F.element_at(_matrix_literal(cent), F.col("list_id") + 1),
             lambda x, y: x - y)))
-
-    def _dtable(qs: Column, cents: list[list[float]]) -> Column:
-        arr = F.array(*[
-            F.array(*[F.lit(float(x)) for x in c]) for c in cents])
-        return F.transform(
-            arr,
-            lambda c: F.aggregate(
-                F.zip_with(qs, c, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0), lambda acc, x: acc + x))
 
     # r17 (guide §1.2 per-task work): the ADC distance tables depend only
     # on the (query, probed list) row — compute them ONCE per probe row on
@@ -1173,8 +1144,8 @@ def ivfpq_score(codes: DataFrame, queries: DataFrame,
     # old shape ran the interpreted fold m·ks times per scanned code.
     probes = probes.select(
         "query_id", "list_id",
-        *[_dtable(F.slice("qr", s * sub + 1, sub),
-                  books[s]).alias(f"__dt{s}")
+        *[_sq_dists(F.slice("qr", s * sub + 1, sub),
+                    books[s]).alias(f"__dt{s}")
           for s in range(m)])
 
     joined = codes.join(F.broadcast(probes), "list_id") \

@@ -224,7 +224,7 @@ def bpe_learn_merges(docs: DataFrame, n_merges: int = 8,
     """The training loop of :func:`bpe_train`, returning the learned
     merge list driver-side (bounded: n_merges rows) so callers can feed
     it straight into :func:`bpe_encode` — train-then-tokenize in one
-    lineage."""
+    lineage.  Every round's persisted relation is released on return."""
     from pyspark import StorageLevel
 
     words = docs.select(F.explode(tokenize(text_col)).alias("word"))
@@ -256,51 +256,57 @@ def bpe_learn_merges(docs: DataFrame, n_merges: int = 8,
     # order exactly as in the sequential loop.  Worst case every batch
     # is 1 merge and the job count matches the old per-merge loop.
     topk = max(4 * n_merges, 16)
-    while len(merges) < n_merges:
-        pair = F.zip_with(
-            F.slice("toks", F.lit(1), F.size("toks") - 1),
-            F.slice("toks", F.lit(2), F.size("toks") - 1),
-            lambda x, y: F.struct(x.alias("x"), y.alias("y")))
-        top = (cur.select("freq", F.explode(pair).alias("p"))
-               .groupBy(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
-               .agg(F.sum("freq").alias("cnt"))
-               .orderBy(F.col("cnt").desc(), "x", "y")
-               .limit(topk).collect())
-        if not top:
-            break
-        saw_all = len(top) < topk
-        boundary = int(top[-1]["cnt"])
-        batch: list[tuple[str, str, int]] = []
-        syms: set[str] = set()
-        for i, r in enumerate(top):
-            if len(merges) + len(batch) >= n_merges:
+    cached = [cur]
+    try:
+        while len(merges) < n_merges:
+            pair = F.zip_with(
+                F.slice("toks", F.lit(1), F.size("toks") - 1),
+                F.slice("toks", F.lit(2), F.size("toks") - 1),
+                lambda x, y: F.struct(x.alias("x"), y.alias("y")))
+            top = (cur.select("freq", F.explode(pair).alias("p"))
+                   .groupBy(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
+                   .agg(F.sum("freq").alias("cnt"))
+                   .orderBy(F.col("cnt").desc(), "x", "y")
+                   .limit(topk).collect())
+            if not top:
                 break
-            x, y, cnt = r["x"], r["y"], int(r["cnt"])
-            if i > 0:
-                ok = (saw_all or cnt > boundary) and not ({x, y} & syms)
-                if ok:
-                    for j in range(i + 1, len(top)):
-                        q = top[j]
-                        if (int(q["cnt"]) >= cnt
-                                and {q["x"], q["y"]} & syms):
-                            ok = False
-                            break
-                if not ok:
+            saw_all = len(top) < topk
+            boundary = int(top[-1]["cnt"])
+            batch: list[tuple[str, str, int]] = []
+            syms: set[str] = set()
+            for i, r in enumerate(top):
+                if len(merges) + len(batch) >= n_merges:
                     break
-            batch.append((x, y, cnt))
-            syms |= {x, y, x + y}
-            # A self-pair merge (x,x) can CREATE pairs (e.g. (xx,x) from
-            # runs of x) whose count reaches the member's own count with
-            # an unknowable lex position — nothing after it is provable
-            # this round.  (For x≠y, created-pair counts are bounded by
-            # old counts of OTHER pairs sharing a symbol, which the
-            # q-scan above already vets.)
-            if x == y:
-                break
-        toks = F.col("toks")
-        for x, y, cnt in batch:
-            merges.append((len(merges), x, y, x + y, cnt))
-            toks = _merge_pair(toks, x, y)
-        cur = (cur.select("word", "freq", toks.alias("toks"))
-               .persist(StorageLevel.MEMORY_AND_DISK))
-    return merges
+                x, y, cnt = r["x"], r["y"], int(r["cnt"])
+                if i > 0:
+                    ok = (saw_all or cnt > boundary) and not ({x, y} & syms)
+                    if ok:
+                        for j in range(i + 1, len(top)):
+                            q = top[j]
+                            if (int(q["cnt"]) >= cnt
+                                    and {q["x"], q["y"]} & syms):
+                                ok = False
+                                break
+                    if not ok:
+                        break
+                batch.append((x, y, cnt))
+                syms |= {x, y, x + y}
+                # A self-pair merge (x,x) can CREATE pairs (e.g. (xx,x) from
+                # runs of x) whose count reaches the member's own count with
+                # an unknowable lex position — nothing after it is provable
+                # this round.  (For x≠y, created-pair counts are bounded by
+                # old counts of OTHER pairs sharing a symbol, which the
+                # q-scan above already vets.)
+                if x == y:
+                    break
+            toks = F.col("toks")
+            for x, y, cnt in batch:
+                merges.append((len(merges), x, y, x + y, cnt))
+                toks = _merge_pair(toks, x, y)
+            cur = (cur.select("word", "freq", toks.alias("toks"))
+                   .persist(StorageLevel.MEMORY_AND_DISK))
+            cached.append(cur)
+        return merges
+    finally:
+        for df in cached:
+            df.unpersist()

@@ -9,8 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.hashing import (MERSENNE_P, MINHASH_A, MINHASH_B,
-                                 md5_hash64_sql)
+from ..functions.hashing import MERSENNE_P, md5_hash64_sql, minhash_sql_exprs
 from ..operators.dedup import (BAND_SIZE, NUM_BANDS, SIMHASH_BITS,
                                content_key, dedup_exact, minhash_near_dups,
                                minhash_signatures, doc_tokensets,
@@ -374,9 +373,7 @@ QUERIES = {
 
 def _sig_cte() -> str:
     """tokens → distinct token sets → portable hash → 16 min-hash slots."""
-    mins = ",\n           ".join(
-        f"min(({a} * h + {b}) % {MERSENNE_P}) AS sig{i}"
-        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B)))
+    mins = ",\n           ".join(minhash_sql_exprs("h"))
     return f"""
 ts AS (SELECT DISTINCT doc_id, term FROM tokens),
 h AS (SELECT doc_id, {md5_hash64_sql('term')} % {MERSENNE_P} AS h FROM ts),

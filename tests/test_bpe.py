@@ -121,6 +121,20 @@ def test_bpe_train_stops_when_no_pairs(spark):
     assert _train(spark, "a b c a", 4) == []
 
 
+def test_bpe_learn_merges_leaves_nothing_cached(spark):
+    """The merge list is driver-side, so every round's persisted
+    vocabulary relation is released before it returns."""
+    from big_data_assignment_2_spark.operators.textstats import (
+        bpe_learn_merges)
+
+    docs = spark.createDataFrame([("1", "lower lowest newer wider"),
+                                  ("2", "newest widest low")],
+                                 "doc_id string, text string")
+    spark.catalog.clearCache()
+    assert len(bpe_learn_merges(docs, n_merges=2)) == 2
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_bpe_train_batched_rounds_match_sequential(spark):
     """r18 batched rounds: a round may accept several provably-independent
     merges from one top-K collect — the merge list must stay bit-identical

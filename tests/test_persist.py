@@ -197,6 +197,31 @@ def test_persisted_probe_job_count(spark, index_path, job_count):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_batch_probe_sums_and_ranks_off_one_exchange(spark, index_path,
+                                                    job_count):
+    """The batch probe hash-partitions its scored (query, term, doc) rows
+    on query_id once: the per-(query, doc) sum and the per-query window
+    both run off that one exchange, so the batch takes at most 6 Spark
+    jobs (7 when each had its own exchange)."""
+    from big_data_assignment_2_spark.operators.persist import (
+        bm25_probe_persisted_batch)
+    from big_data_assignment_2_spark.plans.search_queries import (
+        BATCH_QUERIES)
+
+    def batch():
+        return bm25_probe_persisted_batch(spark, index_path, BATCH_QUERIES,
+                                          k=5, n_buckets=8)
+
+    batch().collect()                          # first-call effects
+    assert job_count("probe_batch_one_exchange",
+                     lambda: batch().collect()) <= 6
+    df = batch()
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+    assert final.count("Exchange hashpartitioning") == 1, final
+
+
 def test_probe_after_delete_matches_inflight_over_survivors(spark, sf_dir,
                                                             tmp_path):
     """The tombstone df correction rides in the stats collect: a probe of

@@ -98,6 +98,18 @@ def test_pq_codebooks_match_sequential_lloyd(spark, sf_dir):
 
 # --- inline_rows ≡ createDataFrame ---------------------------------------
 
+def _bits(v):
+    """A value with every double spelled as its 8 bytes, so -0.0 and
+    0.0 differ and NaN equals NaN."""
+    import struct
+
+    if isinstance(v, float):
+        return struct.pack(">d", v)
+    if isinstance(v, (list, tuple)):
+        return tuple(_bits(x) for x in v)
+    return v
+
+
 def test_inline_rows_matches_createdataframe(spark):
     from big_data_assignment_2_spark.functions.localrel import inline_rows
 
@@ -112,6 +124,82 @@ def test_inline_rows_matches_createdataframe(spark):
     # empty input keeps the declared schema
     e = inline_rows(spark, [], schema)
     assert e.columns == b.columns and e.count() == 0
+
+    # edge values, compared bit for bit: quoting/escapes and non-ASCII
+    # in strings, NULLs, the bigint extremes, a FLOAT field, and the
+    # doubles a decimal text form could lose
+    rows = [("it's \"q\" \\ a\nb ü€😀", 2**63 - 1, 1.1,
+             [-0.0, 5e-324, float("nan"), float("inf"), float("-inf")]),
+            (None, -(2**63 - 1), None, None),
+            ("", None, 3.4028235e38, [])]
+    schema = "s string, n bigint, f float, xs array<double>"
+    a = inline_rows(spark, rows, schema)
+    b = spark.createDataFrame(rows, schema)
+    assert a.schema == b.schema
+    assert [_bits(r) for r in a.collect()] == [_bits(r) for r in b.collect()]
+
+
+def _py4j_commands(monkeypatch, build) -> int:
+    """The py4j commands the driver sends while running ``build()``."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        build()
+    return sent[0]
+
+
+def test_inline_rows_build_cost_is_constant(spark, monkeypatch):
+    """The whole row set crosses py4j as one literal: building a
+    2,000-row relation costs the same handful of py4j commands as a
+    2-row one (a literal built value by value costs ~44 per value)."""
+    from big_data_assignment_2_spark.functions.localrel import inline_rows
+
+    def build(n):
+        return _py4j_commands(monkeypatch, lambda: inline_rows(
+            spark, [(f"q{i}", i) for i in range(n)], "term string, n bigint"))
+
+    build(2)                                   # first-call effects
+    assert abs(build(2_000) - build(2)) <= 10
+    assert inline_rows(spark, [(f"q{i}", i) for i in range(2_000)],
+                       "term string, n bigint").count() == 2_000
+
+
+def test_json_literals_fold_out_of_the_plan(spark):
+    """A per-row use of a JSON literal (the BM25 term map, a centroid
+    matrix) folds to a plain literal: the optimized plan has no parse
+    left to run per row.  A value that does not fit its declared type
+    fails instead of becoming NULL; one JSON cannot encode fails at
+    build time."""
+    from big_data_assignment_2_spark.functions.localrel import json_literal
+    from big_data_assignment_2_spark.operators.search import _term_lookup
+    from big_data_assignment_2_spark.operators.similarity import (
+        _nearest_centroid_expr)
+
+    terms = spark.createDataFrame([("a",), ("b",), ("z",)], "term string")
+    looked = terms.select(_term_lookup({"b": 2, "a": 7}).alias("df"))
+    vecs = spark.createDataFrame([([0.0, 1.0],), ([5.0, 5.0],)],
+                                 "v array<double>")
+    nearest = vecs.select(_nearest_centroid_expr(
+        F.col("v"), [[0.0, 0.9], [4.0, 6.0], [-0.0, 1e300]]).alias("c"))
+    for df in (looked, nearest):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "from_json" not in plan and "JsonToStructs" not in plan, plan
+    assert [r["df"] for r in looked.collect()] == [7, 2, None]
+    assert [r["c"] for r in nearest.collect()] == [0, 1]
+
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        terms.select(json_literal({"a": "x"}, "map<string,bigint>")
+                     ["a"]).collect()
+    with pytest.raises(TypeError):
+        json_literal({"a": {1, 2}}, "map<string,array<bigint>>")
 
 
 # --- build_query_index ≡ build_index restricted to the terms ------------

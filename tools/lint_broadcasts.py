@@ -85,31 +85,18 @@ ALLOWLIST: dict[tuple[str, str, str], str] = {
         "per-partition offsets: one row per shuffle partition",
     # --- operators/search.py (query-side relations are bounded by the
     #     query's term count; stats aggregates are 1 row) ---
-    (f"{PKG}/operators/search.py", "bm25_topk_batch",
+    (f"{PKG}/operators/search.py", "_bm25_term_rows",
      "documents_info.agg(F.count('*').alias('__n'), "
      "F.avg('length').alias('__avgdl'))"):
         "1-row corpus stats aggregate",
-    (f"{PKG}/operators/search.py", "bm25_topk_batch", "terms_df"):
+    (f"{PKG}/operators/search.py", "_bm25_term_rows", "terms_df"):
         "query-term relation: bounded by query size",
-    (f"{PKG}/operators/search.py", "bm25_topk_batch",
+    (f"{PKG}/operators/search.py", "_bm25_term_rows",
      "document_frequency.join(F.broadcast(terms_df.select('term')"
      ".distinct()), 'term').filter(F.col('df') > 0)"):
         "df FILTERED to the query's terms: bounded by query size",
-    (f"{PKG}/operators/search.py", "bm25_topk_batch",
+    (f"{PKG}/operators/search.py", "_bm25_term_rows",
      "terms_df.select('term').distinct()"):
-        "query-term relation: bounded by query size",
-    (f"{PKG}/operators/search.py", "_bm25_scores_from_terms",
-     "documents_info.agg(F.count('*').alias('__n'), "
-     "F.avg('length').alias('__avgdl'))"):
-        "1-row corpus stats aggregate",
-    (f"{PKG}/operators/search.py", "_bm25_scores_from_terms", "terms_df"):
-        "query-term relation: bounded by query size",
-    (f"{PKG}/operators/search.py", "_bm25_scores_from_terms",
-     "document_frequency.join(F.broadcast(terms_df.distinct()), 'term')"
-     ".filter(F.col('df') > 0)"):
-        "df FILTERED to the query's terms: bounded by query size",
-    (f"{PKG}/operators/search.py", "_bm25_scores_from_terms",
-     "terms_df.distinct()"):
         "query-term relation: bounded by query size",
     (f"{PKG}/operators/search.py", "fuzzy_expand_terms", "oov"):
         "out-of-vocabulary QUERY terms: bounded by query size",
