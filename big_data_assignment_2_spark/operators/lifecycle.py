@@ -69,17 +69,25 @@ def append_tombstones(spark: SparkSession, base_path: str, ids,
     tomb.write.mode("append").parquet(f"{base_path}/tombstones")
 
 
-def read_tombstones(spark: SparkSession, base_path: str, col: str,
-                    id_type: str):
-    """The store's tombstoned ids as a distinct 1-column DataFrame,
-    or None if no delete was ever issued (Hadoop-FS existence check).
-    ``col``/``id_type`` are what :func:`append_tombstones` wrote; the
-    declared schema spares a footer-inference job per read."""
+def tombstone_log(spark: SparkSession, base_path: str, col: str,
+                  id_type: str):
+    """The store's tombstone log as written — one row per logged id,
+    repeats included — or None if no delete was ever issued (Hadoop-FS
+    existence check).  Enough for semi/anti joins, which ignore repeated
+    ids.  ``col``/``id_type`` are what :func:`append_tombstones` wrote;
+    the declared schema spares a footer-inference job per read."""
     path = f"{base_path}/tombstones"
     fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
-    return spark.read.schema(f"{col} {id_type}").parquet(path).distinct()
+    return spark.read.schema(f"{col} {id_type}").parquet(path)
+
+
+def read_tombstones(spark: SparkSession, base_path: str, col: str,
+                    id_type: str):
+    """:func:`tombstone_log` as a distinct 1-column DataFrame, or None."""
+    log = tombstone_log(spark, base_path, col, id_type)
+    return None if log is None else log.distinct()
 
 
 def mask_tombstones(df: DataFrame, tomb, id_col: str) -> DataFrame:

@@ -5,6 +5,30 @@ driver (`app/app.py:29-72, 121-250`, batch sizes 5/50/25 with a "Batch too
 large" fallback).  Here each index table is a Parquet dataset written
 directly from its DataFrame — distributed, columnar, statistics-bearing.
 
+A persisted BM25 store (:func:`write_index`, grown by
+:func:`append_to_index`, shrunk by :func:`delete_from_index` +
+:func:`compact_index`) is five Parquet directories under one base path:
+
+- ``term_document/term_bucket=N/`` — postings (term, doc_id, tf,
+  positions, length): the reference's D5 rows plus their document's
+  ``length``, so a probe scores from the postings alone;
+- ``document_frequency/`` — an append-only log of (term, df), one row per
+  (term, batch); a term's df is the SUM of its rows;
+- ``documents_info/`` — (doc_id[, title], length), the reference's D7;
+- ``corpus_stats/`` — an append-only log of (n, total_length), one row per
+  batch; N and the total length are the SUMS of its rows, and
+  avgdl = total_length / N;
+- ``tombstones/`` — present only while deletes await compaction.
+
+A probe (:func:`bm25_probe_persisted`, :func:`bm25_probe_persisted_batch`)
+is two steps: a stats collect (the corpus_stats rows and the probed
+terms' df rows, one union of scans, summed on the driver) and a scoring
+plan (bucket-pruned postings → BM25 over those literals → per-doc sum →
+top-k).  It reads ``documents_info`` only while tombstones exist.  A
+store written before postings carried ``length`` has no
+``corpus_stats``; every probe, append and compaction of it raises
+(:func:`_require_corpus_stats`) — rewrite it with :func:`write_index`.
+
 Physical layout options mirror the reference's storage semantics:
 - ``partition_postings_by_term_bucket``: the reference's `term` partition
   key (`app.py:48`) made scan-prunable — postings land in
@@ -19,47 +43,58 @@ Physical layout options mirror the reference's storage semantics:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_hash64
+from ..hints import broadcast_if_small
 from .lifecycle import (append_tombstones, atomic_rewrite,
-                        drop_tombstones, hadoop_delete, hadoop_rename,
-                        mask_tombstones, read_tombstones)
+                        drop_tombstones, hadoop_delete, hadoop_fs,
+                        hadoop_rename, mask_tombstones, read_tombstones,
+                        tombstone_log)
 
-# Declared read schemas of the three index relations, as far as the BM25
-# probe reads them.  A declared schema skips the footer-inference job that
-# every schema-less ``spark.read.parquet`` launches; the probe never reads
+# Declared read schemas of the index relations, as far as the BM25 probe
+# reads them.  A declared schema skips the footer-inference job that every
+# schema-less ``spark.read.parquet`` launches; the probe never reads
 # ``positions`` or ``title``, so they are left out.  A store whose column
 # types differ fails at read.
 TERM_DOCUMENT_READ_SCHEMA = \
-    "term string, doc_id string, tf int, term_bucket int"
+    "term string, doc_id string, tf int, length int, term_bucket int"
 DOCUMENT_FREQUENCY_READ_SCHEMA = "term string, df long"
 DOCUMENTS_INFO_READ_SCHEMA = "doc_id string, length int"
+CORPUS_STATS_SCHEMA = "n long, total_length long"
 
 
 def write_index(index: dict[str, DataFrame], base_path: str,
                 term_buckets: int = 16) -> None:
-    """Persist the three index tables; postings term-bucket-partitioned.
+    """Persist an index (``build_index``'s three relations) as a new
+    store (module docstring: the store layout), in this order:
 
-    The postings relation is cached across the writes: document_frequency
-    is derived FROM postings (operators/index.doc_freq), so without the
-    cache its write re-runs the whole tokenize+explode+agg lineage a
-    second time — at 100 TB that's a full extra corpus pass per index
-    build.  Positions are stored as the reference's absolute
-    ``list<int>`` (`app.py:42-50`)."""
-    from pyspark import StorageLevel
+    1. ``documents_info`` (:func:`_documents_info_batch`);
+    2. ``term_document``: the postings joined to those lengths,
+       term-bucket-partitioned; positions are stored as the reference's
+       absolute ``list<int>`` (`app.py:42-50`);
+    3. ``document_frequency``: :func:`index.doc_freq` over the postings
+       just written — a scan of their dictionary-encoded term column,
+       the same rows ``index["document_frequency"]`` holds (df counts a
+       term's postings, `reducer2.py`), and cheaper than caching the
+       postings (positions and all) to derive it from;
+    4. ``corpus_stats``: the batch's one (n, total_length) row."""
+    from .index import doc_freq
 
-    td = index["term_document"].persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    spark = index["documents_info"].sparkSession
+    postings = f"{base_path}/term_document"
+    with _documents_info_batch(index["documents_info"], base_path,
+                               "overwrite") as lengths:
         partition_postings_by_term_bucket(
-            td, f"{base_path}/term_document", term_buckets)
-        index["document_frequency"].write.mode("overwrite") \
+            index["term_document"].join(lengths, "doc_id"), postings,
+            term_buckets)
+        doc_freq(spark.read.schema("term string").parquet(postings)) \
+            .write.mode("overwrite") \
             .parquet(f"{base_path}/document_frequency")
-        index["documents_info"].write.mode("overwrite") \
-            .parquet(f"{base_path}/documents_info")
-    finally:
-        td.unpersist()
 
 
 def append_to_index(docs: DataFrame, base_path: str,
@@ -70,47 +105,116 @@ def append_to_index(docs: DataFrame, base_path: str,
     index's ``append_to_ivfpq`` and the fingerprint store's
     ``append_fingerprints``:
 
-    - ``term_document``: the batch's postings rows land in the SAME
-      ``term_bucket=N/`` directories (an atomic partition append — new
-      doc ids never collide with persisted rows, so no read-modify-write);
+    - ``documents_info``: plain per-doc append
+      (:func:`_documents_info_batch`);
+    - ``term_document``: the batch's postings rows (each with its
+      document's length) land in the SAME ``term_bucket=N/``
+      directories (an atomic partition append — new doc ids never
+      collide with persisted rows, so no read-modify-write);
     - ``document_frequency``: an append-only PER-BATCH log — batch doc
       sets are disjoint, so the union corpus's df is the SUM of the
       per-batch dfs, re-aggregated at probe time
       (:func:`bm25_probe_persisted`), exactly the fingerprint store's
-      read-time-min contract;
-    - ``documents_info``: plain per-doc append (N and avgdl are already
-      probe-time aggregates over this relation, so they follow the
-      corpus automatically).
+      read-time-min contract.  The postings are cached across the two
+      writes, since the batch's df is derived from them;
+    - ``corpus_stats``: the batch's (n, total_length) row, summed at
+      probe time like the df log.
 
     The batch index is built from the incoming docs only — one batch
     pass, never a rebuild; at 100 TB this is the difference between a
-    nightly full-corpus index job and appending the day's crawl."""
+    nightly full-corpus index job and appending the day's crawl.  A
+    store without ``corpus_stats`` (written by older code) raises
+    before anything is written."""
     from pyspark import StorageLevel
 
     from .index import build_index
 
+    _require_corpus_stats(docs.sparkSession, base_path)
     index = build_index(docs)
     td = index["term_document"].persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        (td.withColumn("term_bucket", term_bucket(F.col("term"), term_buckets))
-         .repartition(F.col("term_bucket"))
-         .sortWithinPartitions("term")
-         .write.mode("append").partitionBy("term_bucket")
-         .parquet(f"{base_path}/term_document"))
-        index["document_frequency"].write.mode("append") \
-            .parquet(f"{base_path}/document_frequency")
-        index["documents_info"].write.mode("append") \
-            .parquet(f"{base_path}/documents_info")
+        with _documents_info_batch(index["documents_info"], base_path,
+                                   "append") as lengths:
+            (td.join(lengths, "doc_id")
+             .withColumn("term_bucket",
+                         term_bucket(F.col("term"), term_buckets))
+             .repartition(F.col("term_bucket"))
+             .sortWithinPartitions("term")
+             .write.mode("append").partitionBy("term_bucket")
+             .parquet(f"{base_path}/term_document"))
+            index["document_frequency"].write.mode("append") \
+                .parquet(f"{base_path}/document_frequency")
     finally:
         td.unpersist()
+
+
+@contextmanager
+def _documents_info_batch(info: DataFrame, base_path: str, mode: str):
+    """Write one batch's ``documents_info`` with ``mode`` and yield its
+    (doc_id, length) for the postings join; once the block has written
+    the batch's postings and df, write its ``corpus_stats`` row.
+
+    ``info`` is cached for the block, so the documents are tokenized
+    once; the join broadcasts it while it fits
+    :func:`hints.broadcast_if_small`, which keeps a
+    ``build_index(term_buckets=N)`` lineage's one exchange and one file
+    per bucket (above the gate AQE picks the join, and a shuffle join
+    spreads each bucket over several files).  The batch's
+    (n, total_length) is taken by
+    ``DataFrame.observe`` during the ``documents_info`` write (no extra
+    job) and written last, so a batch whose block failed adds nothing
+    to N."""
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation
+
+    spark = info.sparkSession
+    obs = Observation()
+    info = info.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        _observe_corpus_stats(info, obs).write.mode(mode) \
+            .parquet(f"{base_path}/documents_info")
+        yield broadcast_if_small(info.select("doc_id", "length"))
+    finally:
+        info.unpersist()
+    _corpus_stats_row(spark, obs).write.mode(mode) \
+        .parquet(f"{base_path}/corpus_stats")
+
+
+def _observe_corpus_stats(info: DataFrame, obs) -> DataFrame:
+    """``info`` (a documents_info relation) measuring its n and
+    total_length into ``obs`` when an action runs it."""
+    return info.observe(obs, F.count(F.lit(1)).alias("n"),
+                        F.sum("length").alias("total_length"))
+
+
+def _corpus_stats_row(spark: SparkSession, obs) -> DataFrame:
+    """The (n, total_length) row :func:`_observe_corpus_stats` measured
+    (an empty relation sums to 0), as a one-partition relation: its
+    write is one task and one file."""
+    got = obs.get
+    return spark.range(1, numPartitions=1).select(
+        F.lit(got["n"]).cast("long").alias("n"),
+        F.lit(got["total_length"] or 0).cast("long").alias("total_length"))
+
+
+def _require_corpus_stats(spark: SparkSession, base_path: str) -> None:
+    """Fail fast on a store written before postings carried ``length``:
+    it has no ``corpus_stats`` log, and probing it would score with NULL
+    lengths."""
+    fs, hpath = hadoop_fs(spark, f"{base_path}/corpus_stats")
+    if not fs.exists(hpath):
+        raise ValueError(
+            f"{base_path} has no corpus_stats: it was written by an older "
+            "write_index whose postings carry no document length. Rewrite "
+            "this store with write_index(build_index(docs), base_path).")
 
 
 def delete_from_index(spark: SparkSession, base_path: str, doc_ids) -> None:
     """TOMBSTONE documents out of a persisted BM25 index — the takedown/
     GDPR path of the search index's lifecycle (shared ``lifecycle``
     tombstone-log mechanics): :func:`bm25_probe_persisted` masks the
-    docs out of postings AND doc stats at read time and SUBTRACTS their
-    df contribution; :func:`compact_index` removes their rows
+    docs out of the postings at read time and SUBTRACTS their N, length
+    and df contributions; :func:`compact_index` removes their rows
     physically and drops the log.
 
     df correctness is the non-trivial part: a deleted doc must stop
@@ -126,35 +230,42 @@ def delete_from_index(spark: SparkSession, base_path: str, doc_ids) -> None:
 
 
 def _index_tombstones(spark: SparkSession, base_path: str):
-    """Tombstoned doc ids as a 1-column DataFrame, or None if no delete
+    """The tombstone log as a 1-column ``doc_id`` DataFrame (repeated
+    ids kept: every consumer is a semi/anti join), or None if no delete
     has ever been issued."""
-    return read_tombstones(spark, base_path, "__del_doc", "string")
+    log = tombstone_log(spark, base_path, "__del_doc", "string")
+    return None if log is None else log.toDF("doc_id")
 
 
 def compact_index(spark: SparkSession, base_path: str) -> None:
-    """Physically remove tombstoned documents from all three index
-    relations and drop the tombstone log — the periodic maintenance job
-    (same maintenance-window contract and Hadoop-FS directory swap as
+    """Physically remove tombstoned documents from every index relation
+    and drop the tombstone log — the periodic maintenance job (same
+    maintenance-window contract and Hadoop-FS directory swap as
     ``dedup.compact_fingerprint_store``).  No-op when nothing was ever
-    deleted.
+    deleted; raises on a store without ``corpus_stats``
+    (:func:`_require_corpus_stats`).
 
     - ``term_document``: anti-join on doc_id, rewritten into the same
       term_bucket partition layout (the bucket column survives the
-      round-trip as a partition column);
+      round-trip as a partition column; ``length`` rides along);
     - ``document_frequency``: the per-batch append log is collapsed to
       one row per term with the deleted docs' contribution subtracted —
       computed from the postings scan (postings rows are unique per
       (term, doc), so the correction is a per-term count of deleted
       rows); terms whose df reaches zero are dropped;
-    - ``documents_info``: plain anti-join (N and avgdl are probe-time
-      aggregates and follow automatically).
+    - ``documents_info``: plain anti-join, its survivors' (n,
+      total_length) observed during the rewrite;
+    - ``corpus_stats``: the per-batch log collapsed to that one
+      survivors-only row.
 
     After compaction no byte of a deleted document remains in the index
     — pinned by tests/test_index_tombstones.py."""
-    tomb = _index_tombstones(spark, base_path)
-    if tomb is None:
+    from pyspark.sql import Observation
+
+    tomb_docs = _index_tombstones(spark, base_path)
+    if tomb_docs is None:
         return
-    tomb_docs = tomb.withColumnRenamed("__del_doc", "doc_id")
+    _require_corpus_stats(spark, base_path)
     postings = spark.read.parquet(f"{base_path}/term_document")
     delta = (postings.join(tomb_docs, "doc_id", "left_semi")
              .groupBy("term").agg(F.count("*").alias("__ddf")))
@@ -171,17 +282,24 @@ def compact_index(spark: SparkSession, base_path: str) -> None:
                    postings.join(tomb_docs, "doc_id", "left_anti")
                    .repartition(F.col("term_bucket"))
                    .sortWithinPartitions("term"), "term_bucket")
-    atomic_rewrite(spark, base_path, "documents_info",
-                   spark.read.parquet(f"{base_path}/documents_info")
-                   .join(tomb_docs, "doc_id", "left_anti"))
+    obs = Observation()
+    atomic_rewrite(spark, base_path, "documents_info", _observe_corpus_stats(
+        spark.read.parquet(f"{base_path}/documents_info")
+        .join(tomb_docs, "doc_id", "left_anti"), obs))
+    atomic_rewrite(spark, base_path, "corpus_stats",
+                   _corpus_stats_row(spark, obs))
     drop_tombstones(spark, base_path)
 
 
 def read_index(spark: SparkSession, base_path: str) -> dict[str, DataFrame]:
-    """Logical view of a persisted index: the three relations as
-    written, postings carrying absolute ``positions``."""
+    """Logical view of a persisted index: the three relations of
+    ``build_index``, postings carrying absolute ``positions``.  The
+    postings' stored ``length`` is dropped (it is ``documents_info``'s,
+    which every in-flight consumer joins), and ``corpus_stats`` is
+    probe-side only."""
     return {
-        "term_document": spark.read.parquet(f"{base_path}/term_document"),
+        "term_document": spark.read.parquet(f"{base_path}/term_document")
+        .drop("length"),
         "document_frequency": spark.read.parquet(f"{base_path}/document_frequency"),
         "documents_info": spark.read.parquet(f"{base_path}/documents_info"),
     }
@@ -277,34 +395,34 @@ def _bm25_probe_relations(spark: SparkSession, base_path: str,
     """The shared read side of every persisted-BM25 probe.  It runs the
     first of the probe's two steps and prepares the second:
 
-    1. **Stats collect** — ONE driver query returns N and avgdl over the
-       doc stats (Spark's own ``count``/``avg``, so the literals equal the
-       in-plan values of the in-flight path bit for bit) and the df of
-       each probed term.  The doc-stats rows form the NULL-term group of
-       one ``groupBy("term")``; the df log's rows form one group per term.
-    2. **Scoring inputs** — the bucket-pruned postings scan restricted to
-       the LIVE terms (df > 0) and the doc lengths, both ready to join.
+    1. **Stats collect** — ONE driver query: the ``corpus_stats`` rows
+       and the probed terms' ``document_frequency`` rows as one union of
+       scans (no aggregate, so no exchange); the driver sums them.  Both
+       logs hold one row per batch (a single build has one), so N, the
+       total length and each term's df are SUMS, and avgdl =
+       total_length / N in Python — bit for bit Spark's ``avg(length)``
+       over the documents (Spark sums an int column in doubles, exact
+       below 2**53, then divides once; Python's int / int is correctly
+       rounded the same way).
+    2. **Scoring input** — the bucket-pruned postings scan restricted to
+       the LIVE terms (df > 0); each row carries its document's
+       ``length``, so no lengths join follows.
 
-    Returns ``(postings, lengths, n, avgdl, df)``; ``df`` maps each live
-    term to its df and is empty when no probed term is live.  Every
-    relation is read with its declared schema (no footer inference).
-    Nothing is cached between calls: each call re-reads the store, so a
-    probe sees every earlier ``append_to_index``/``delete_from_index``.
+    Returns ``(postings, n, avgdl, df)``; ``df`` maps each live term to
+    its df and is empty when no probed term is live.  Every relation is
+    read with its declared schema (no footer inference).  Nothing is
+    cached between calls: each call re-reads the store, so a probe sees
+    every earlier ``append_to_index``/``delete_from_index``.  A store
+    without ``corpus_stats`` raises (:func:`_require_corpus_stats`).
 
-    - df log: after append_to_index the relation holds one row per
-      (term, batch); batch doc sets are disjoint so the union df is the
-      SUM (single-build indexes have one row per term and the sum is the
-      identity) — the same read-time re-aggregation contract as the
-      fingerprint store's keys log.
-    - Tombstoned docs (delete_from_index) are masked at read time from
-      the doc lengths (N/avgdl are aggregates over the lengths, so they
-      follow; their postings rows drop at the scoring plan's inner
-      join with the masked lengths), and their df contribution is
-      SUBTRACTED inside the same stats collect: each tombstoned postings
-      row of a probed term adds df −1 (one row per (term, doc), so this
-      is the exact correction; the rows are still on disk until
-      compact_index).  No full-index pass ever lands on the query
-      path."""
+    Tombstoned docs (delete_from_index): the log is read once per probe
+    and broadcast into both steps (no ``distinct``: a semi/anti join
+    ignores repeated ids).  The stats collect adds a (−1, −length) row
+    per tombstoned doc in ``documents_info`` and a df −1 row per
+    tombstoned postings row of a probed term (one row per (term, doc),
+    so this is the exact correction; the rows are still on disk until
+    compact_index); the scoring plan anti-joins the postings against
+    the log.  No full-index pass ever lands on the query path."""
     def read(rel: str, schema: str) -> DataFrame:
         return spark.read.schema(schema).parquet(f"{base_path}/{rel}")
 
@@ -312,32 +430,42 @@ def _bm25_probe_relations(spark: SparkSession, base_path: str,
         return probe_postings(spark, f"{base_path}/term_document", ts,
                               n_buckets).drop("term_bucket")
 
-    no_len = F.lit(None).cast("int").alias("length")
-    lengths = read("documents_info", DOCUMENTS_INFO_READ_SCHEMA)
-    dfs = (read("document_frequency", DOCUMENT_FREQUENCY_READ_SCHEMA)
-           .filter(F.col("term").isin(terms))
-           .select("term", no_len, "df"))
+    def row(term="NULL", n="NULL", total_length="NULL", df="NULL"):
+        return [f"CAST({term} AS STRING) AS term",
+                f"CAST({n} AS BIGINT) AS n",
+                f"CAST({total_length} AS BIGINT) AS total_length",
+                f"CAST({df} AS BIGINT) AS df"]
+
+    _require_corpus_stats(spark, base_path)
+    parts = [
+        read("corpus_stats", CORPUS_STATS_SCHEMA)
+        .selectExpr(*row(n="n", total_length="total_length")),
+        read("document_frequency", DOCUMENT_FREQUENCY_READ_SCHEMA)
+        .filter(F.col("term").isin(terms)).selectExpr(*row("term", df="df")),
+    ]
     tomb = _index_tombstones(spark, base_path)
     if tomb is not None:
-        tomb_docs = tomb.withColumnRenamed("__del_doc", "doc_id")
-        lengths = lengths.join(tomb_docs, "doc_id", "left_anti")
-        dfs = dfs.unionByName(
-            scan(terms).join(tomb_docs, "doc_id", "left_semi")
-            .select("term", no_len, F.lit(-1).cast("long").alias("df")))
-    rows = (lengths.select(F.lit(None).cast("string").alias("term"),
-                           "length", F.lit(None).cast("long").alias("df"))
-            .unionByName(dfs)
-            .groupBy("term")
-            .agg(F.count("*").alias("n"), F.avg("length").alias("avgdl"),
-                 F.sum("df").alias("df"))
-            .collect())
-    n, avgdl, df = 0, None, {}
-    for r in rows:
+        tomb = broadcast_if_small(tomb)
+        parts += [
+            read("documents_info", DOCUMENTS_INFO_READ_SCHEMA)
+            .join(tomb, "doc_id", "left_semi")
+            .selectExpr(*row(n="-1", total_length="-length")),
+            scan(terms).join(tomb, "doc_id", "left_semi")
+            .selectExpr(*row("term", df="-1")),
+        ]
+    n = total_length = 0
+    df: dict[str, int] = {}
+    for r in reduce(DataFrame.union, parts).collect():
         if r["term"] is None:
-            n, avgdl = r["n"], r["avgdl"]
-        elif r["df"] > 0:
-            df[r["term"]] = r["df"]
-    return scan(sorted(df)), lengths, n, avgdl, df
+            n += r["n"]
+            total_length += r["total_length"]
+        else:
+            df[r["term"]] = df.get(r["term"], 0) + r["df"]
+    df = {t: v for t, v in df.items() if v > 0}
+    postings = scan(sorted(df))
+    if tomb is not None:
+        postings = postings.join(tomb, "doc_id", "left_anti")
+    return postings, n, total_length / n if n else None, df
 
 
 def bm25_probe_persisted(spark: SparkSession, base_path: str, query: str,
@@ -345,25 +473,29 @@ def bm25_probe_persisted(spark: SparkSession, base_path: str, query: str,
     """Serving-path BM25 over a PERSISTED index, in two steps: the stats
     collect of :func:`_bm25_probe_relations` (one driver query for N,
     avgdl and the probed terms' df), then ONE scoring plan — the
-    bucket-pruned postings of the live terms ⋈ doc lengths, the BM25
-    expression over those literals (a query term's multiplicity is a
-    literal weight), per-doc sum, ``round(·, 6)``, top-k by
-    (score desc, doc_id asc).  No state is cached between calls.  Same
+    bucket-pruned postings of the live terms (each carrying its
+    document's length), the BM25 expression over those literals (a
+    query term's multiplicity is a literal weight), per-doc sum,
+    ``round(·, 6)``, top-k by (score desc, doc_id asc).  On a store
+    without tombstones that is 3 Spark jobs: the collect, the sum's
+    shuffle and the top-k.  No state is cached between calls.  Same
     rows as the in-flight ``search.bm25_topk`` over the same corpus; a
-    query with no live term returns no rows."""
+    query with no live term returns no rows.  A store written by older
+    code (no ``corpus_stats``) raises: rewrite it with
+    :func:`write_index`."""
     from collections import Counter
 
     from ..functions.text import tokenize_query
     from .search import bm25_literal_score
 
     terms = tokenize_query(query)
-    postings, lengths, n, avgdl, df = _bm25_probe_relations(
+    postings, n, avgdl, df = _bm25_probe_relations(
         spark, base_path, terms, n_buckets)
     if not df:
         return spark.createDataFrame([], "doc_id string, score double")
     score = bm25_literal_score(n, avgdl, df,
                                Counter(t for t in terms if t in df))
-    return (postings.join(lengths, "doc_id")
+    return (postings
             .groupBy("doc_id").agg(F.round(F.sum(score), 6).alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
@@ -378,14 +510,17 @@ def bm25_probe_persisted_batch(spark: SparkSession, base_path: str,
     broadcast (query_id, term) relation (one row per scoring occurrence)
     to the postings, applies the same literal BM25 expression as
     :func:`bm25_probe_persisted`, and ranks with a per-query window
-    top-k.  Q sequential ``bm25_probe_persisted`` calls would pay Q stats
-    collects and Q scoring plans; the batch pays one of each — measured
-    in bench.py (`search_bm25_batch_probe`).
+    top-k off one ``query_id`` exchange.  On a store without tombstones
+    that is 4 Spark jobs: the collect, the term relation's broadcast,
+    the shuffle and the ranking.  Q sequential ``bm25_probe_persisted``
+    calls would pay Q stats collects and Q scoring plans; the batch pays
+    one of each — measured in bench.py (`search_bm25_batch_probe`).
 
-    Composes with the full index lifecycle: append-log df summing and
-    tombstone df-subtraction come from the shared
+    Composes with the full index lifecycle: append-log summing and
+    tombstone subtraction come from the shared
     :func:`_bm25_probe_relations` read side, so a batch probe after
     delete_from_index equals per-query probes over the shrunk corpus.
+    A store written by older code (no ``corpus_stats``) raises.
     Returns (query_id, doc_id, score, rank ≤ k)."""
     from ..functions.localrel import inline_rows
     from ..functions.text import tokenize_query
@@ -393,16 +528,15 @@ def bm25_probe_persisted_batch(spark: SparkSession, base_path: str,
 
     q_terms = [(qid, t) for qid, q in queries.items()
                for t in tokenize_query(q)]
-    postings, lengths, n, avgdl, df = _bm25_probe_relations(
+    postings, n, avgdl, df = _bm25_probe_relations(
         spark, base_path, sorted({t for _, t in q_terms}), n_buckets)
     rows = [(qid, t) for qid, t in q_terms if t in df]
     if not rows:
         return spark.createDataFrame(
             [], "query_id string, doc_id string, score double, rank int")
     terms_df = inline_rows(spark, rows, "query_id string, term string")
-    return _sum_rank_per_query(
-        postings.join(F.broadcast(terms_df), "term").join(lengths, "doc_id"),
-        bm25_literal_score(n, avgdl, df), k)
+    return _sum_rank_per_query(postings.join(F.broadcast(terms_df), "term"),
+                               bm25_literal_score(n, avgdl, df), k)
 
 
 def write_ivf(assigned: DataFrame, path: str) -> None:

@@ -13,9 +13,9 @@ two steps instead, each a handful of Spark jobs:
 
 1. stats collect — one driver query for N, avgdl and the probed terms'
    df (the reference's point reads, `query.py:63-80, 114-139`);
-2. scoring plan — bucket-pruned postings ⋈ doc lengths → BM25 expr over
-   those literals (:func:`bm25_literal_score`) → groupBy(doc).sum →
-   TakeOrderedAndProject(k).
+2. scoring plan — bucket-pruned postings (each carrying its document's
+   length) → BM25 expr over those literals (:func:`bm25_literal_score`)
+   → groupBy(doc).sum → TakeOrderedAndProject(k).
 
 No state is cached between calls: the store may change between probes
 (``append_to_index``, ``delete_from_index``), so every call re-reads it.

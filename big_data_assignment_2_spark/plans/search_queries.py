@@ -127,7 +127,8 @@ def q_bm25_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted index from 3/4 of the corpus, APPEND the remaining quarter
     as a day's ingest batch (``persist.append_to_index`` — postings land
     in the same term-bucket partitions, df becomes an append-only
-    per-batch log summed at probe time, doc stats plain-append so N and
+    per-batch log summed at probe time, doc stats plain-append and the
+    batch's (n, total_length) row joins the corpus_stats log, so N and
     avgdl follow the corpus), then probe the flagship query.  The result
     must equal BM25 over the FULL corpus — the search_bm25_topk oracle
     applies verbatim, so a green row certifies that appending a batch is
@@ -196,7 +197,8 @@ def q_bm25_delete_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     {rem} (persist.delete_from_index — an append-only log, no
     read-modify-write), then probe the flagship query.  The probe must
     serve results as if the deleted docs were never indexed: postings
-    and doc stats masked (N and avgdl follow), and — the genuinely
+    masked, the deleted docs' count and lengths subtracted from the
+    corpus stats (N and avgdl follow), and — the genuinely
     non-trivial part — each probed term's df reduced by the deleted
     docs that contained it, the correction derived from the
     bucket-pruned postings scan the probe already does.  The oracle is

@@ -169,10 +169,12 @@ def test_bm25_probe_persisted_matches_inflight(spark, sf_dir, index_path):
 
 def test_persisted_probe_job_count(spark, index_path, job_count):
     """A persisted probe is one stats collect plus one scoring plan.  On
-    a store without tombstones a single query runs in at most 6 Spark
-    jobs; the design it replaced (schema inference on each of three
-    reads, stats joined into the scoring plan) ran 13, and 14 for this
-    batch.  The declared-schema scan still prunes bucket directories."""
+    a store without tombstones a single query runs in at most 3 Spark
+    jobs (the collect, the per-doc sum's shuffle, the top-k) and this
+    batch in at most 4; with doc lengths joined into the scoring plan
+    and N/avgdl aggregated over them they were 5 and 6, and 13 and 14
+    with schema inference on each read.  The declared-schema scan still
+    prunes bucket directories."""
     from big_data_assignment_2_spark.operators.persist import (
         bm25_probe_persisted, bm25_probe_persisted_batch)
     from big_data_assignment_2_spark.plans.search_queries import (
@@ -188,8 +190,8 @@ def test_persisted_probe_job_count(spark, index_path, job_count):
                                           k=5, n_buckets=8)
 
     single().collect(), batch().collect()      # first-call effects
-    assert job_count("probe_single", lambda: single().collect()) <= 6
-    assert job_count("probe_batch", lambda: batch().collect()) < 14
+    assert job_count("probe_single", lambda: single().collect()) <= 3
+    assert job_count("probe_batch", lambda: batch().collect()) <= 4
 
     plan = single()._jdf.queryExecution().executedPlan().toString()
     assert "term_bucket" in plan.split("PartitionFilters", 1)[1][:300]
@@ -201,8 +203,9 @@ def test_batch_probe_sums_and_ranks_off_one_exchange(spark, index_path,
                                                     job_count):
     """The batch probe hash-partitions its scored (query, term, doc) rows
     on query_id once: the per-(query, doc) sum and the per-query window
-    both run off that one exchange, so the batch takes at most 6 Spark
-    jobs (7 when each had its own exchange)."""
+    both run off that one exchange, so the batch takes at most 4 Spark
+    jobs: the stats collect, the term relation's broadcast, the shuffle
+    and the ranking."""
     from big_data_assignment_2_spark.operators.persist import (
         bm25_probe_persisted_batch)
     from big_data_assignment_2_spark.plans.search_queries import (
@@ -214,7 +217,7 @@ def test_batch_probe_sums_and_ranks_off_one_exchange(spark, index_path,
 
     batch().collect()                          # first-call effects
     assert job_count("probe_batch_one_exchange",
-                     lambda: batch().collect()) <= 6
+                     lambda: batch().collect()) <= 4
     df = batch()
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString() \
@@ -245,10 +248,11 @@ def test_probe_after_delete_matches_inflight_over_survivors(spark, sf_dir,
 
 def test_tombstoned_probe_job_count(spark, sf_dir, tmp_path,
                                     job_count):
-    """A probe of a store with tombstones reads the log with its declared
-    schema: no footer-inference job, so a single query runs in at most 9
-    Spark jobs and this batch in at most 11 (10 and 12 when the log's
-    schema was inferred on every read)."""
+    """A probe of a store with tombstones reads the log once, with its
+    declared schema and no ``distinct``, and broadcasts it into both
+    steps: a single query runs in at most 5 Spark jobs and this batch in
+    at most 6 (9 and 10 when each step took the log's distinct and
+    joined masked doc lengths)."""
     from big_data_assignment_2_spark.operators.persist import (
         bm25_probe_persisted, bm25_probe_persisted_batch, delete_from_index)
     from big_data_assignment_2_spark.plans.search_queries import (
@@ -269,8 +273,8 @@ def test_tombstoned_probe_job_count(spark, sf_dir, tmp_path,
                                           n_buckets=8).collect()
 
     single(), batch()                          # first-call effects
-    assert job_count("tomb_single", single) <= 9
-    assert job_count("tomb_batch", batch) <= 11
+    assert job_count("tomb_single", single) <= 5
+    assert job_count("tomb_batch", batch) <= 6
 
 
 def test_probe_repeated_term_matches_inflight(spark, sf_dir, index_path):

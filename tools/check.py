@@ -81,6 +81,34 @@ def dtype_parity_problems(sdf, con, sql):
     return problems
 
 
+def jvm_memory_bytes(spec: str) -> int:
+    """A JVM memory size such as ``8g``, ``512m`` or ``2048`` (MiB, as
+    ``spark.driver.memory`` reads a bare number) in bytes."""
+    spec = spec.strip().lower().rstrip("b")
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    if spec and spec[-1] in units:
+        return int(float(spec[:-1]) * units[spec[-1]])
+    return int(spec) << 20
+
+
+def duckdb_memory_limit_mb(phys_bytes: int | None = None,
+                           driver_memory: str | None = None) -> int:
+    """DuckDB's cap for the oracle replays, in MiB: half of the physical
+    RAM the Spark driver's heap (``SPARK_DRIVER_MEMORY``, as
+    ``session.get_spark`` sets it) leaves.  The other half covers the
+    JVM's off-heap memory, this Python process and the OS, so an oracle
+    larger than the cap spills to ``temp_directory`` instead of growing
+    the process until the kernel kills it.  At least 1 GiB."""
+    import os
+
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    if driver_memory is None:
+        driver_memory = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
+    free = phys_bytes - jvm_memory_bytes(driver_memory)
+    return max(1024, free // 2 >> 20)
+
+
 def main() -> int:
     import duckdb
 
@@ -94,10 +122,10 @@ def main() -> int:
     con = duckdb.connect()
     import os
     # Heavy oracle replays (the sf1 PPJoin candidate join peaks far above
-    # RAM) must SPILL, not OOM-kill the process: cap DuckDB below the
-    # machine and give it a temp dir (r16 — an uncapped sf1 run died at
-    # 128 GB inside the dedup_prefix_jaccard oracle).
-    con.execute("SET memory_limit='48GB'")
+    # RAM) must SPILL, not OOM-kill the process: cap DuckDB below what
+    # the machine has left beside the Spark driver's heap and give it a
+    # temp dir.
+    con.execute(f"SET memory_limit='{duckdb_memory_limit_mb()}MiB'")
     con.execute("SET temp_directory='/tmp/duckdb_check_spill'")
     for t in ("region nation customer supplier part orders lineitem events "
               "documents embeddings").split():
