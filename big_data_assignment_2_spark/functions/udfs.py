@@ -13,9 +13,15 @@ uses it.
 ``shannon_entropy`` is the demonstration (a real quality signal for
 training-data filtering): chars → counts → -Σ p·log2 p, vectorized with
 numpy over each Arrow batch.
+
+Every function that runs inside a Python worker calls
+:func:`drop_zip_finders` as its first statement (see there for why).
 """
 
 from __future__ import annotations
+
+import sys
+import zipimport
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
@@ -24,9 +30,35 @@ from pyspark.sql.types import DoubleType
 from .rounding import spark_round6_array
 
 
+def drop_zip_finders() -> None:
+    """Delete every cached ``zipimporter`` from ``sys.path_importer_cache``.
+
+    PySpark (4.1.2) starts every Python task with
+    ``importlib.invalidate_caches()``, and on Python 3.11 each cached
+    ``zipimporter`` then re-reads its archive's whole central directory.
+    A worker imports pyspark from ``$SPARK_HOME/python/lib/pyspark.zip``,
+    so it holds 16 of them (pyspark.zip and 11 of its sub-packages at
+    1,328 entries each, the py4j zip, a 5,359-entry Spark jar): about
+    0.15 CPU-s per task, whatever the task carries.  Spark reuses
+    workers, so calling this first in every worker-side function leaves
+    the next task on the same worker nothing to re-read.
+
+    Safe: modules already loaded keep their own loaders, and
+    ``PathFinder`` rebuilds a finder for any later import that needs one
+    (from zipimport's directory cache, without re-reading the archive).
+    Must be a call in the function body, not a decorator:
+    ``applyInPandas`` reads the function's own signature to decide
+    whether to pass the group key."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
 @pandas_udf(DoubleType())
 def shannon_entropy(texts: pd.Series) -> pd.Series:
     """Character-level Shannon entropy (bits/char), 0.0 for empty text."""
+    drop_zip_finders()
     import math
     from collections import Counter
 
@@ -58,6 +90,7 @@ def minmax_scale_by_group(df, group_col: str, value_col: str,
     schema = f"{fields}, {out_col} double"
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         lo, hi = pdf[value_col].min(), pdf[value_col].max()
         if hi == lo:
             pdf[out_col] = 0.0

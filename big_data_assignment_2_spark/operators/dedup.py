@@ -913,12 +913,11 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
                       text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Near-dup pairs by SimHash: candidates share one of four 15-bit bands
     (any pair within Hamming distance 3 must agree on ≥1 band — pigeonhole),
-    then exact Hamming ≤ max_hamming via bit_count(xor)."""
-    from pyspark import StorageLevel
-
+    then exact Hamming ≤ max_hamming via bit_count(xor).  Nothing is
+    left cached (see :func:`skew.skew_safe_self_pairs`)."""
     from .skew import skew_safe_self_pairs
 
-    sig = simhash(docs, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
+    sig = simhash(docs, text_col, id_col)
     bands = sig.select("doc_id", "simhash", F.posexplode(F.array(*[
         F.shiftright("simhash", b * 15).bitwiseAND(F.lit(0x7FFF))
         for b in range(4)])).alias("band_id", "band_val"))

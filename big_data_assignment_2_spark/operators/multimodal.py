@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
+from ..functions.udfs import drop_zip_finders
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", StringType()),
     StructField("media_type", StringType()),   # image | audio | video
@@ -101,10 +103,11 @@ def _spread_for_python(df: DataFrame) -> DataFrame:
     assignment is the only thing that changes — every per-payload result
     is a pure function of the row, so results are multiset-identical.
 
-    Each extra task costs about 0.3 CPU-s of Python worker set-up
-    (measured on Spark 4.1.2 / Python 3.11, SCALE.md "Python crossing
-    fixed cost"), so the spread pays only where the per-payload work is
-    heavier than that — the codec chains here.  Cheap vectorised passes
+    Each extra task costs Python worker set-up (about 0.3 CPU-s on Spark
+    4.1.2 / Python 3.11 before ``udfs.drop_zip_finders``, about 0.05-0.09
+    CPU-s on a reused worker since; SCALE.md "Python crossing fixed
+    cost"), so the spread pays only where the per-payload work is heavier
+    than that — the codec chains here.  Cheap vectorised passes
     size their task count from the row count instead (see
     ``similarity._python_tasks``)."""
     n = df.sparkSession.sparkContext.defaultParallelism
@@ -124,6 +127,7 @@ def _map_in_batches(df: DataFrame, fn, schema,
     later Arrow stage in the session is resized by this one."""
 
     def sliced(batches):
+        drop_zip_finders()
         return fn(pdf.iloc[i:i + batch_size].reset_index(drop=True)
                   for pdf in batches
                   for i in range(0, len(pdf), batch_size))

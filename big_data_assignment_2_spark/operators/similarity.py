@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.localrel import json_literal
 from ..functions.rounding import spark_round6, spark_round6_array
+from ..functions.udfs import drop_zip_finders
 
 NUM_PLANES = 8
 PLANE_MOD = 1009  # deterministic pseudo-random weights: ((3p+7d+11)·k) % 1009
@@ -435,8 +436,10 @@ def banded_lsh_candidate_pairs(vectors: DataFrame, rows_per_band: int = 4,
       ``(id, vn, band, bucket, buckets)`` — ``buckets`` is the row's whole
       bucket array.  When the caller knows the row count it runs in
       ``ceil(N / arrow.maxRecordsPerBatch)`` tasks (at most
-      ``defaultParallelism``): each Python task costs ~0.3 CPU-s of worker
-      set-up whatever it carries (SCALE.md "Python crossing fixed cost").
+      ``defaultParallelism``): each Python task costs worker set-up
+      whatever it carries, ~0.05-0.09 CPU-s on a reused worker once
+      ``udfs.drop_zip_finders`` runs first in every worker function
+      (SCALE.md "Python crossing fixed cost").
     * Exchange: ``repartition(band, bucket)``, then
       ``sortWithinPartitions(band, bucket, id)``.  With a known N it has
       ``ceil(N·b / arrow.maxRecordsPerBatch)`` partitions (at most
@@ -505,6 +508,7 @@ def _banded_pairs(vectors: DataFrame, rows_per_band: int, bands: int,
                  "buckets array<int>")
 
     def vn_buckets(batches):
+        drop_zip_finders()
         import numpy as np
         Wnp = np.asarray(W, dtype=np.float64)
         for pdf in batches:
@@ -627,6 +631,7 @@ def _banded_pairs(vectors: DataFrame, rows_per_band: int, bands: int,
                                     "__dot": dots})
 
     def pair_stream(batches):
+        drop_zip_finders()
         pending = []  # the open (band, bucket) group, across batches
         for pdf in batches:
             if pdf.empty:
@@ -1288,6 +1293,7 @@ def semdedup(vectors: DataFrame, k: int = 8, iters: int = 2,
     th = float(threshold)
 
     def cluster_drop(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         import numpy as np
         pdf = (pdf.sort_values(["cdist", "vec_id"], kind="mergesort")
                .reset_index(drop=True))
@@ -1375,6 +1381,7 @@ def semdedup_chain(vectors: DataFrame, k: int = 8, iters: int = 2,
     types = {f.name: f.dataType.simpleString() for f in sel.schema}
 
     def chain(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         import numpy as np
 
         pdf = (pdf.sort_values(["cdist", "vec_id"], kind="mergesort")
@@ -1469,6 +1476,7 @@ def mmr_rerank(candidates: DataFrame, vectors: DataFrame, k: int = 5,
 
     def greedy(cand_pdf: pd.DataFrame, pairs_pdf: pd.DataFrame) \
             -> pd.DataFrame:
+        drop_zip_finders()
         if cand_pdf.empty:
             return pd.DataFrame(columns=out_cols)
         sim = {(a, b): float(s)

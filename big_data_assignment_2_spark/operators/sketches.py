@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.udfs import drop_zip_finders
+
 # Mersenne prime 2^31 - 1.  The hash reduces x mod p BEFORE multiplying:
 # |x % p| < 2^31 and a < 2^31, so (x % p) * a stays under 2^62 for EVERY
 # int64 input — no silent wrap in non-ANSI Spark, no HUGEINT promotion in
@@ -143,6 +145,7 @@ def misra_gries_candidates(df: DataFrame, key_col: str,
     import pandas as pd
 
     def mg(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        drop_zip_finders()
         counters: Counter = Counter()
         for pdf in batches:
             counters.update(pdf[key_col].value_counts().to_dict())

@@ -62,13 +62,13 @@ def skew_safe_self_pairs(df: DataFrame, keys: list[str], payload: list[str],
     than the max_hot_keys cap simply stay unsplit — still correct.)
 
     Returns columns ``<c>_a``/``<c>_b`` for each payload column.
-    """
-    from pyspark import StorageLevel
 
-    # The input feeds the detection pass plus both join sides; persist it
-    # so upstream lineage (tokenize/minhash/explode) is computed once,
-    # spilling to disk at scale.
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    Nothing is cached: the detection job computes the input's lineage
+    once, and the pair plan computes it once more.  Every join side reads
+    the same ``repartition(*keys)`` exchange, which the join's own
+    distribution requirement accepts, so Spark reuses that one exchange
+    for both sides instead of shuffling the input twice.
+    """
     kcol = F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
     frac = min(max(detect_fraction, 0.0), 1.0)
     sampled = df.sample(fraction=frac, seed=seed) if frac < 1.0 else df
@@ -80,6 +80,8 @@ def skew_safe_self_pairs(df: DataFrame, keys: list[str], payload: list[str],
          .orderBy(F.desc("__kn")).limit(max_hot_keys)
          .collect())
     ]
+
+    df = df.repartition(*keys)
 
     def _side(d: DataFrame, suffix: str) -> DataFrame:
         return d.select(*keys, *[F.col(c).alias(f"{c}_{suffix}") for c in payload])

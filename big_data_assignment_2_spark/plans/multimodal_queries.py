@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.udfs import drop_zip_finders
 from ..operators.multimodal import (EMBED_DIM, audio_chunks, decode_media,
                                     fake_embed, frame_sample,
                                     media_from_documents, media_metadata,
@@ -276,6 +277,7 @@ def q_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
     def gen_decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        drop_zip_finders()
         for pdf in batches:
             out = {"media_id": [], "width": [], "height": [],
                    "duration_ms": [], "n_tracks": [], "n_bytes": []}

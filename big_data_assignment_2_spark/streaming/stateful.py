@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 
+from ..functions.udfs import drop_zip_finders
+
 OUTPUT_SCHEMA = StructType([
     StructField("user_id", LongType()),
     StructField("n_events", LongType()),
@@ -33,6 +35,7 @@ STATE_SCHEMA = StructType([
 
 
 def _update(key, pdfs: Iterator, state: GroupState):
+    drop_zip_finders()
     import pandas as pd
 
     n, total = state.get if state.exists else (0, 0.0)

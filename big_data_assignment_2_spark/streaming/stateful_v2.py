@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import (DoubleType, LongType, StructField, StructType)
 
+from ..functions.udfs import drop_zip_finders
+
 OUTPUT_SCHEMA = StructType([
     StructField("user_id", LongType()),
     StructField("n_events", LongType()),
@@ -135,6 +137,7 @@ def run_processor_batch(events: DataFrame, n_microbatches: int = 3,
     yields per key)."""
 
     def drive(key, pdf):
+        drop_zip_finders()
         proc = processor_cls()
         proc.init(_BatchHandle())
         chunks = [pdf.iloc[i::n_microbatches] for i in range(n_microbatches)]
@@ -244,6 +247,7 @@ def run_processor_timeordered(events: DataFrame, n_microbatches: int = 4,
     watermarked stream delivers per-key time order up to the watermark)."""
 
     def drive(key, pdf):
+        drop_zip_finders()
         import numpy as np
 
         proc = processor_cls()

@@ -132,6 +132,25 @@ def test_simhash_identical_and_near(docs):
         assert h <= 10
 
 
+def test_simhash_and_lsh_pairs_leave_nothing_cached(spark, docs):
+    """The skew-safe self-join behind ``simhash_near_dups`` and
+    ``lsh_candidate_pairs`` persists nothing, and its join sides share
+    one exchange of the input."""
+    from big_data_assignment_2_spark.operators.dedup import (
+        doc_tokensets, lsh_band_keys, lsh_candidate_pairs,
+        minhash_signatures)
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    simhash_near_dups(docs).collect()
+    pairs = lsh_candidate_pairs(lsh_band_keys(minhash_signatures(
+        doc_tokensets(docs))))
+    assert {tuple(r) for r in pairs.collect()} >= {("1", "2"), ("1", "3")}
+    assert cache.isEmpty()
+    assert "ReusedExchange" in \
+        pairs._jdf.queryExecution().executedPlan().toString()
+
+
 def test_winnowing_substring_guarantee(spark):
     from big_data_assignment_2_spark.operators.dedup import (
         winnow_fingerprints, winnow_overlap_pairs)

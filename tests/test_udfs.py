@@ -54,3 +54,81 @@ def test_minmax_scale_by_group(spark):
     # schema passthrough: all source columns + scaled
     out = minmax_scale_by_group(df, "grp", "v")
     assert out.columns == ["grp", "id", "v", "scaled"]
+
+
+def _zip_finders() -> list[str]:
+    import sys
+    import zipimport
+
+    return [p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)]
+
+
+def test_drop_zip_finders_keeps_zip_imports_working(tmp_path):
+    import importlib
+    import sys
+    import zipfile
+
+    from big_data_assignment_2_spark.functions.udfs import drop_zip_finders
+
+    archive = tmp_path / "zpkg_archive.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zpkg_t/__init__.py", "")
+        z.writestr("zpkg_t/first.py", "VALUE = 1\n")
+        z.writestr("zpkg_t/second.py", "from .first import VALUE\n"
+                                       "VALUE2 = VALUE + 1\n")
+    sys.path.insert(0, str(archive))
+    try:
+        first = importlib.import_module("zpkg_t.first")
+        assert first.VALUE == 1
+        assert any(p.startswith(str(archive)) for p in _zip_finders())
+        drop_zip_finders()
+        assert _zip_finders() == []
+        # a module loaded before the drop keeps its loader; a new import
+        # from the same archive rebuilds its finder on demand
+        second = importlib.import_module("zpkg_t.second")
+        assert second.VALUE2 == 2
+        assert importlib.reload(first).VALUE == 1
+    finally:
+        sys.path.remove(str(archive))
+        for name in [m for m in sys.modules if m.split(".")[0] == "zpkg_t"]:
+            del sys.modules[name]
+        drop_zip_finders()
+
+
+def test_reused_worker_starts_its_next_task_with_no_zip_finders(spark):
+    """Each task's ``importlib.invalidate_caches()`` re-reads every cached
+    zip archive; a worker function that drops them first leaves the next
+    task on the same (reused) worker none to re-read.  The job repeats
+    until a worker comes back, because Spark hands out idle workers in
+    turn and workers left idle by earlier tests take the first tasks."""
+
+    def record(batches):
+        import os
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        n = sum(isinstance(f, zipimport.zipimporter)
+                for f in sys.path_importer_cache.values())
+        drop_zip_finders()
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "n_zip": [n]})
+
+    from big_data_assignment_2_spark.functions.udfs import drop_zip_finders
+
+    df = spark.range(0, 200, numPartitions=2)
+    seen: set[int] = set()
+    reused = []
+    for _ in range(32):
+        run = [(r["pid"], r["n_zip"]) for r in
+               df.mapInPandas(record, "pid long, n_zip long").collect()]
+        assert len(run) == 2
+        reused += [(pid, n) for pid, n in run if pid in seen]
+        seen |= {pid for pid, _ in run}
+        if len(reused) >= 2:
+            break
+    assert reused, "no Python worker was reused across the runs"
+    assert all(n == 0 for _, n in reused), reused
