@@ -15,7 +15,8 @@ training-data filtering): chars → counts → -Σ p·log2 p, vectorized with
 numpy over each Arrow batch.
 
 Every function that runs inside a Python worker calls
-:func:`drop_zip_finders` as its first statement (see there for why).
+:func:`drop_zip_finders` as its first statement (see there for why);
+``tests/test_udfs.py`` walks the package and fails on one that does not.
 """
 
 from __future__ import annotations

@@ -103,9 +103,9 @@ def _spread_for_python(df: DataFrame) -> DataFrame:
     assignment is the only thing that changes — every per-payload result
     is a pure function of the row, so results are multiset-identical.
 
-    Each extra task costs Python worker set-up (about 0.3 CPU-s on Spark
-    4.1.2 / Python 3.11 before ``udfs.drop_zip_finders``, about 0.05-0.09
-    CPU-s on a reused worker since; SCALE.md "Python crossing fixed
+    Each extra task costs Python worker set-up (about 0.17-0.36 CPU-s on
+    Spark 4.1.2 / Python 3.11 before ``udfs.drop_zip_finders``, about
+    0.03 CPU-s on a reused worker since; SCALE.md "Python crossing fixed
     cost"), so the spread pays only where the per-payload work is heavier
     than that — the codec chains here.  Cheap vectorised passes
     size their task count from the row count instead (see

@@ -437,7 +437,7 @@ def banded_lsh_candidate_pairs(vectors: DataFrame, rows_per_band: int = 4,
       bucket array.  When the caller knows the row count it runs in
       ``ceil(N / arrow.maxRecordsPerBatch)`` tasks (at most
       ``defaultParallelism``): each Python task costs worker set-up
-      whatever it carries, ~0.05-0.09 CPU-s on a reused worker once
+      whatever it carries, ~0.03 CPU-s on a reused worker once
       ``udfs.drop_zip_finders`` runs first in every worker function
       (SCALE.md "Python crossing fixed cost").
     * Exchange: ``repartition(band, bucket)``, then

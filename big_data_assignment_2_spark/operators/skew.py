@@ -63,11 +63,16 @@ def skew_safe_self_pairs(df: DataFrame, keys: list[str], payload: list[str],
 
     Returns columns ``<c>_a``/``<c>_b`` for each payload column.
 
-    Nothing is cached: the detection job computes the input's lineage
-    once, and the pair plan computes it once more.  Every join side reads
-    the same ``repartition(*keys)`` exchange, which the join's own
-    distribution requirement accepts, so Spark reuses that one exchange
-    for both sides instead of shuffling the input twice.
+    Nothing is cached.  The detection job computes the input's lineage
+    once.  With no hot keys the pair plan computes it once more: both join
+    sides read one ``repartition(*keys)`` exchange, which the join's own
+    distribution requirement accepts, so Spark reuses it for both sides.
+    With hot keys the cold and hot branches read the lineage once each
+    (Spark pushes their filters below any shared exchange): both cold
+    sides reuse one exchange on ``keys``, and both hot sides reuse one
+    exchange on ``(keys, __salt)``, which spreads a hot bucket's rows over
+    ``salt`` tasks before the ×salt explode and already is the salted
+    join's partitioning on the left side.
     """
     kcol = F.concat_ws("\x1f", *[F.col(k).cast("string") for k in keys])
     frac = min(max(detect_fraction, 0.0), 1.0)
@@ -81,21 +86,27 @@ def skew_safe_self_pairs(df: DataFrame, keys: list[str], payload: list[str],
          .collect())
     ]
 
-    df = df.repartition(*keys)
+    def _side(d: DataFrame, suffix: str, *extra: str) -> DataFrame:
+        return d.select(*keys, *[F.col(c).alias(f"{c}_{suffix}")
+                                 for c in payload], *extra)
 
-    def _side(d: DataFrame, suffix: str) -> DataFrame:
-        return d.select(*keys, *[F.col(c).alias(f"{c}_{suffix}") for c in payload])
+    def _pairs(d: DataFrame) -> DataFrame:
+        d = d.repartition(*keys)
+        return _side(d, "a").join(_side(d, "b"), keys)
 
     out_cols = [f"{c}_a" for c in payload] + [f"{c}_b" for c in payload]
     if not hot_list:
-        return _side(df, "a").join(_side(df, "b"), keys).select(*out_cols)
+        return _pairs(df).select(*out_cols)
 
-    cold = df.filter(~kcol.isin(hot_list))
-    hot = df.filter(kcol.isin(hot_list))
-    cold_pairs = _side(cold, "a").join(_side(cold, "b"), keys)
-    hot_a = _side(hot, "a").withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(f"{c}_a") for c in payload]),
-                         F.lit(salt)).cast("int"))
+    cold_pairs = _pairs(df.filter(~kcol.isin(hot_list)))
+    # coalesce makes the salt non-nullable, so the join infers no
+    # isnotnull filter that would make the two hot sides' exchanges differ
+    hot = (df.filter(kcol.isin(hot_list))
+           .withColumn("__salt", F.coalesce(F.pmod(
+               F.xxhash64(*[F.col(c) for c in payload]),
+               F.lit(salt)).cast("int"), F.lit(0)))
+           .repartition(*keys, "__salt"))
+    hot_a = _side(hot, "a", "__salt")
     hot_b = _side(hot, "b").withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
     hot_pairs = hot_a.join(hot_b, keys + ["__salt"]).drop("__salt")

@@ -71,6 +71,31 @@ def test_self_pairs_hot_key_identical(spark):
     assert len(counts) == 8 and max(counts) < 300 / 8 * 2
 
 
+def test_self_pairs_hot_side_is_salted_before_it_is_exploded(spark):
+    """Nothing is cached, yet each branch reads its input once: both cold
+    sides reuse one exchange on the key, both hot sides reuse one exchange
+    on (key, salt), and the hot rows reach the ×salt explode through that
+    exchange, never through an exchange on the key alone (which would put
+    a whole hot bucket in one task)."""
+    rows = [("hot", i) for i in range(300)] + \
+           [(f"k{i % 20}", 1000 + i) for i in range(100)]
+    df = spark.createDataFrame(rows, "key string, doc_id long")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    safe = skew_safe_self_pairs(df, ["key"], ["doc_id"],
+                                hot_threshold=50, salt=8,
+                                detect_fraction=1.0)
+    assert len(safe.collect()) == 300 * 300 + 20 * 5 * 5
+    assert cache.isEmpty()
+
+    plan = safe._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    assert sum("ReusedExchange" in line for line in final) == 2, plan
+    gen = next(i for i, line in enumerate(final) if "Generate explode" in line)
+    feed = next(line for line in final[gen + 1:] if "Exchange" in line)
+    assert "hashpartitioning(key#" in feed and "__salt#" in feed, plan
+
+
 def test_self_pairs_no_hot_keys_pure_cold(spark):
     """Below threshold nothing is salted; result identical to plain and
     the plan degrades to the single self-join (no Union branch)."""

@@ -99,13 +99,15 @@ def test_drop_zip_finders_keeps_zip_imports_working(tmp_path):
 def test_reused_worker_starts_its_next_task_with_no_zip_finders(spark):
     """Each task's ``importlib.invalidate_caches()`` re-reads every cached
     zip archive; a worker function that drops them first leaves the next
-    task on the same (reused) worker none to re-read.  The job repeats
-    until a worker comes back, because Spark hands out idle workers in
-    turn and workers left idle by earlier tests take the first tasks."""
+    task on the same (reused) worker none to re-read.  One job of 32
+    one-row tasks on local[4] runs more tasks than there can be Python
+    workers, so some worker runs several of them in turn; every task
+    after a worker's first must find no zip finder."""
 
     def record(batches):
         import os
         import sys
+        import time
         import zipimport
 
         import pandas as pd
@@ -115,20 +117,84 @@ def test_reused_worker_starts_its_next_task_with_no_zip_finders(spark):
         drop_zip_finders()
         for _ in batches:
             pass
-        yield pd.DataFrame({"pid": [os.getpid()], "n_zip": [n]})
+        yield pd.DataFrame({"pid": [os.getpid()], "t": [time.monotonic_ns()],
+                            "n_zip": [n]})
 
     from big_data_assignment_2_spark.functions.udfs import drop_zip_finders
 
-    df = spark.range(0, 200, numPartitions=2)
-    seen: set[int] = set()
-    reused = []
-    for _ in range(32):
-        run = [(r["pid"], r["n_zip"]) for r in
-               df.mapInPandas(record, "pid long, n_zip long").collect()]
-        assert len(run) == 2
-        reused += [(pid, n) for pid, n in run if pid in seen]
-        seen |= {pid for pid, _ in run}
-        if len(reused) >= 2:
-            break
-    assert reused, "no Python worker was reused across the runs"
-    assert all(n == 0 for _, n in reused), reused
+    rows = (spark.range(0, 32, numPartitions=32)
+            .mapInPandas(record, "pid long, t long, n_zip long").collect())
+    assert len(rows) == 32
+    by_pid: dict[int, list] = {}
+    for r in rows:
+        by_pid.setdefault(r["pid"], []).append((r["t"], r["n_zip"]))
+    later = [n for tasks in by_pid.values() for _, n in sorted(tasks)[1:]]
+    assert later, "no Python worker ran two tasks"
+    assert all(n == 0 for n in later), sorted(by_pid.items())
+
+
+def _python_crossings(tree):
+    """(function name, call line, enclosing def or None) for every function
+    handed to Spark to run in a Python worker: pandas_udf-decorated defs and
+    the first argument of mapInPandas / applyInPandas /
+    applyInPandasWithState."""
+    import ast
+
+    parents = {}
+    for node in ast.walk(tree):
+        for child in ast.iter_child_nodes(node):
+            parents[child] = node
+
+    def enclosing(node):
+        node = parents.get(node)
+        while node is not None and not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            node = parents.get(node)
+        return node
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and any(
+                "pandas_udf" in ast.unparse(d) for d in node.decorator_list):
+            yield node, node
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("mapInPandas", "applyInPandas",
+                                       "applyInPandasWithState")):
+            arg = node.args[0]
+            assert isinstance(arg, ast.Name), ast.unparse(node)
+            scope = enclosing(node)
+            body = scope.body if scope is not None else tree.body
+            defs = [d for d in body if isinstance(d, ast.FunctionDef)
+                    and d.name == arg.id]
+            if not defs and scope is not None:
+                defs = [d for d in tree.body if isinstance(d, ast.FunctionDef)
+                        and d.name == arg.id]
+            assert len(defs) == 1, ast.unparse(node)
+            yield node, defs[0]
+
+
+def test_every_python_crossing_drops_zip_finders_first():
+    """Every function the package hands to a Python worker calls
+    ``drop_zip_finders()`` as its first statement (after any docstring);
+    one that does not pays the zip re-read on every task again."""
+    import ast
+    import pathlib
+
+    import big_data_assignment_2_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    checked, missing = [], []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for site, fn in _python_crossings(tree):
+            body = fn.body
+            if (body and isinstance(body[0], ast.Expr)
+                    and isinstance(body[0].value, ast.Constant)
+                    and isinstance(body[0].value.value, str)):
+                body = body[1:]
+            where = f"{path.relative_to(root)}:{site.lineno} {fn.name}"
+            checked.append(where)
+            first = ast.unparse(body[0]) if body else ""
+            if first != "drop_zip_finders()":
+                missing.append(where)
+    assert len(checked) >= 13, checked
+    assert not missing, missing
